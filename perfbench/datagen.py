@@ -13,8 +13,6 @@ sees anything but these generated tables.
   then amplified ``k`` times with a per-replica token salt (``word#r``):
   every shingle is distinct across replicas, so the duplicate structure
   (true pairs, LSH bucket sizes) grows linearly in ``k``, not ``k**2``.
-- ``embeddings``: unit vectors around ``n_clusters`` centres, amplified
-  with a per-replica jitter so no two vectors are equal.
 - ``write_stream_shards``: a document stream split into parquet shards,
   one shard per micro-batch.
 """
@@ -197,7 +195,7 @@ def base_corpus(seed: int, n_docs: int) -> list[str]:
     return texts
 
 
-def documents(seed: int, n_base: int, k: int, id_offset: int = 0) -> pa.Table:
+def documents(seed: int, n_base: int, k: int) -> pa.Table:
     """The base corpus x ``k`` replicas; replica ``rep`` salts every
     token as ``word#rep`` (replica 0 is the unsalted base)."""
     base = base_corpus(seed, n_base)
@@ -208,7 +206,7 @@ def documents(seed: int, n_base: int, k: int, id_offset: int = 0) -> pa.Table:
     for rep in range(k):
         salt = f"#{rep}" if rep else ""
         for i, t in enumerate(base):
-            ids.append(id_offset + rep * n_base + i)
+            ids.append(rep * n_base + i)
             texts.append(" ".join(w + salt for w in t.split()) if salt else t)
         langs.append(lang)
         sources.append(source)
@@ -218,22 +216,6 @@ def documents(seed: int, n_base: int, k: int, id_offset: int = 0) -> pa.Table:
         "lang": np.concatenate(langs),
         "source": np.concatenate(sources),
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-
-
-def embeddings(seed: int, n_base: int, k: int, dim: int = 64, n_clusters: int = 10) -> pa.Table:
-    """Unit vectors: ``n_base`` clustered points, each replicated ``k``
-    times with an independent jitter."""
-    r = _rng(seed, "embeddings")
-    centres = r.normal(size=(n_clusters, dim))
-    label = r.integers(0, n_clusters, n_base)
-    base = centres[label] + 0.6 * r.normal(size=(n_base, dim))
-    reps = np.repeat(base, k, axis=0) + 0.05 * r.normal(size=(n_base * k, dim))
-    vecs = (reps / np.linalg.norm(reps, axis=1, keepdims=True)).astype(np.float32)
-    return pa.table({
-        "vec_id": np.arange(n_base * k, dtype=np.int64),
-        "embedding": pa.FixedSizeListArray.from_arrays(vecs.ravel(), dim).cast(pa.list_(pa.float32())),
-        "label": np.repeat(label, k).astype(np.int32),
     })
 
 

@@ -72,16 +72,21 @@ class Tracer:
         """Materialise a layer's output inside its span (traced runs only)."""
         return df.localCheckpoint() if self.traced else df
 
-    def wrap(self, module, attr: str, layer: str, name: str, pin: bool = True) -> None:
+    def wrap(self, module, attr: str, layer: str, name: str, pin: bool = True,
+             probe=None) -> None:
         """Open a span around every call of ``module.attr`` made from
         inside the program (e.g. from a streaming callback); with ``pin``
-        the returned DataFrame is materialised inside the span."""
+        the returned DataFrame is materialised inside the span. ``probe(out,
+        *args)`` records counts about the call while tracing is on."""
         fn = getattr(module, attr)
 
         def traced(*args, **kwargs):
             with self.span(layer, name):
                 out = fn(*args, **kwargs)
-                return self.boundary(out) if pin else out
+                out = self.boundary(out) if pin else out
+                if probe is not None and self.traced:
+                    probe(out, *args)
+                return out
 
         setattr(module, attr, traced)
 

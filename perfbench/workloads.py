@@ -150,10 +150,11 @@ class Olap(Workload):
 
 
 class WebtextBuild(Workload):
-    """One offline training-set build per op: exact dedup -> MinHash ->
-    LSH candidates -> connected components (stored through the snapshot
-    store) -> quality and Gopher filters -> embedding SemDeDup (IVF
-    coarse quantizer) -> tokenize/chunk -> partitioned parquet write."""
+    """One offline training-set build per op: exact dedup -> the
+    program's near-dup clusters (``materialized_clusters``: MinHash -> LSH
+    candidates -> connected components, each stored through the snapshot
+    store) -> quality and Gopher filters -> embedding SemDeDup (IVF coarse
+    quantizer) -> tokenize/chunk -> partitioned parquet write."""
 
     name = "webtext_build"
 
@@ -167,15 +168,53 @@ class WebtextBuild(Workload):
         self.builds = 0
         self.digest = None
         if self.tr.traced:
-            from spider_spark.dedup import minhash, semantic
-
-            self.tr.wrap(minhash, "minhash_signatures", "dedup", "signature")
-            self.tr.wrap(semantic, "train_centroids", "similarity", "train_centroids", pin=False)
+            self.trace_program()
         # warm-up (codegen, JIT, Python workers): the same build over a
         # small corpus of another seed, so it costs less than a full build
         warm = self.path("warm")
         datagen.write_table(warm, "documents", datagen.documents(c.seed + 1, c.size("web_warm_docs"), 1))
         self.run_build(warm)
+
+    def trace_program(self) -> None:
+        """Spans around the calls the program makes itself inside
+        ``materialized_clusters``: the two store artifacts (with hit/miss
+        counts), MinHash signatures, LSH candidates and connected
+        components; and the coarse quantizer inside SemDeDup."""
+        from pyspark.sql import functions as F
+
+        from spider_spark import store
+        from spider_spark.dedup import minhash, semantic
+        from spider_spark.graph import algorithms
+        from spider_spark.graph.algorithms import SMALL_CC_EDGES
+
+        tr = self.tr
+        materialize_once = store.materialize_once
+
+        def counted_materialize_once(spark, sf_dir, name, version, build, *args):
+            built = []
+
+            def counted_build():
+                built.append(name)
+                return build()
+
+            with tr.span("store", name):
+                out = materialize_once(spark, sf_dir, name, version, counted_build, *args)
+            if tr.traced:
+                tr.add("store.misses" if built else "store.hits", 1)
+            return out
+
+        def count_candidates(cand, *_):
+            tr.add("dedup.candidate_pairs", cand.count())
+            tr.add("dedup.useful_pairs", cand.filter(F.col("est_jaccard") >= minhash.EST_THRESHOLD).count())
+
+        def count_edges(_, edges, *__):
+            tr.add("graph.driver_twin", int(edges.count() <= SMALL_CC_EDGES))
+
+        store.materialize_once = counted_materialize_once
+        tr.wrap(minhash, "minhash_signatures", "dedup", "signature")
+        tr.wrap(minhash, "lsh_candidates_est", "dedup", "candidate", probe=count_candidates)
+        tr.wrap(algorithms, "connected_components", "graph", "connected_components", probe=count_edges)
+        tr.wrap(semantic, "train_centroids", "similarity", "train_centroids", pin=False)
 
     def run_build(self, sf_dir: str) -> float:
         """One build of ``sf_dir`` into a fresh output and artifact store;
@@ -197,9 +236,8 @@ class WebtextBuild(Workload):
         from spider_spark import store
         from spider_spark.catalog import Catalog
         from spider_spark.dedup.exact import exact_dedup
-        from spider_spark.dedup.minhash import EST_THRESHOLD, lsh_candidates_est
         from spider_spark.dedup.semantic import semantic_removals
-        from spider_spark.graph.algorithms import SMALL_CC_EDGES, connected_components
+        from spider_spark.graph.algorithms import materialized_clusters
         from spider_spark.sinks.writers import write_partitioned
         from spider_spark.text.analysis import score_quality
         from spider_spark.text.crawl import gopher_repetition
@@ -213,32 +251,16 @@ class WebtextBuild(Workload):
         with tr.span("dedup", "exact"):
             uniq = tr.boundary(docs.join(exact_dedup(docs).select("doc_id"), "doc_id", "left_semi"))
 
-        def clusters():
-            with tr.span("dedup", "candidate"):
-                cand = tr.boundary(lsh_candidates_est(uniq))
-                if tr.traced:
-                    tr.add("dedup.candidate_pairs", cand.count())
-                    tr.add("dedup.useful_pairs", cand.filter(F.col("est_jaccard") >= EST_THRESHOLD).count())
-            edges = cand.filter(F.col("est_jaccard") >= EST_THRESHOLD).select(
-                F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-            )
-            with tr.span("graph", "connected_components"):
-                if tr.traced:
-                    tr.add("graph.driver_twin", int(edges.count() <= SMALL_CC_EDGES))
-                return tr.boundary(connected_components(edges))
-
-        with tr.span("store", "clusters"):
-            if tr.traced:
-                done = os.path.join(store.snapshot_path(sf_dir, "bench_clusters", 1), "_SUCCESS")
-                tr.add("store.hits" if os.path.exists(done) else "store.misses", 1)
-            comps = store.materialize_once(spark, sf_dir, "bench_clusters", 1, clusters)
+        # the program's near-dup cluster artifact: MinHash -> LSH candidates
+        # (stored) -> connected components (stored)
+        clusters = materialized_clusters(spark, sf_dir)
 
         # the filtered set, its embeddings and the final set each feed
         # several consumers, so the build pins them (as a production job
         # would) in every run
         with tr.span("text", "filters"):
-            dup = comps.filter(F.col("node") != F.col("component")).select(F.col("node").alias("doc_id"))
-            reps = uniq.join(dup, "doc_id", "left_anti")
+            non_rep = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
+            reps = uniq.join(non_rep, "doc_id", "left_anti")
             q = score_quality(reps).filter("passes").select("doc_id", "n_tokens")
             g = gopher_repetition(spark, sf_dir).filter("passes_repetition").select("doc_id")
             filtered = reps.join(q, "doc_id").join(g, "doc_id").localCheckpoint()
@@ -332,7 +354,7 @@ class WebtextBuild(Workload):
             "similarity.probe_s": (self.tr.total("similarity", "semantic_dedup")
                                    - self.tr.total("similarity", "train_centroids")) / n,
             "similarity.candidates_per_query": c["similarity.compared"] / max(1, c["similarity.queries"]),
-            "store.build_s": self.tr.total("store") / n,
+            "store.build_s": st.get("store", 0.0) / n,
             "store.hits": c["store.hits"] / n,
             "store.misses": c["store.misses"] / n,
             "store.bytes": c["store.bytes"] / n,
@@ -346,16 +368,14 @@ class WebtextBuild(Workload):
 
 
 class CrawlIngest(Workload):
-    """A seeded document stream in parquet shards, ingested by one
-    streaming query: each shard is one micro-batch that is merged into the
-    incremental LSH candidate index (``merge_batch``, the step
-    ``stream_merge`` runs per batch) and then passed through the
-    ``corpus_filter_dedup_sink`` ingest gate. One op is one micro-batch; a
-    round streams every shard from a fresh copy of the bootstrapped index
-    state."""
+    """A seeded document stream in parquet shards, ingested by the
+    program's ``stream_merge`` query: each shard is one micro-batch that is
+    merged into the incremental LSH candidate index (``merge_batch``) and
+    then passed through the ``corpus_filter_dedup_sink`` ingest gate. One op
+    is one micro-batch; a round streams every shard from a fresh copy of
+    the bootstrapped index state."""
 
     name = "crawl_ingest"
-    DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
     def setup(self) -> None:
         from spider_spark.streaming import incremental_index as inc
@@ -374,11 +394,25 @@ class CrawlIngest(Workload):
         os.makedirs(self.path("warm-shards"))
         shutil.copy(shards[0], self.path("warm-shards"))
         self.base_df = self.spark.read.parquet(self.path("base", "documents.parquet"))
+        # stream_merge reads (doc_id, text) only; the gate also needs the
+        # crawl metadata, joined back per batch
+        self.meta = self.spark.read.parquet(self.path("shards")).drop("text")
         with tr.span("dedup", "init_state"):
             inc.init_state(self.spark, self.path("state0"), self.base_df.select("doc_id", "text"))
         if tr.traced:
             tr.wrap(inc, "minhash_signatures", "dedup", "signature")
             tr.wrap(inc, "estimate_jaccard", "dedup", "candidate")
+        merge_batch = inc.merge_batch
+
+        def merge_then_gate(spark, state_path, batch_docs):
+            with tr.span("streaming", "merge_batch"):
+                new_pairs = merge_batch(spark, state_path, batch_docs)
+            with tr.span("text", "ingest_gate"):
+                self.gate(batch_docs.join(self.meta, "doc_id"), self.batch_id)
+            self.batch_id += 1
+            return new_pairs
+
+        inc.merge_batch = merge_then_gate  # what stream_merge's foreachBatch calls
         self.rounds_run = 0
         self.ingest(self.path("warm-shards"))  # warm-up: one micro-batch
 
@@ -392,22 +426,9 @@ class CrawlIngest(Workload):
         self.state = state = self.path(f"state-{r}")
         shutil.copytree(self.path("state0"), state)
         gate_out = self.path(f"gate-{r}")
-        gate = corpus_filter_dedup_sink(self.path(f"gate-state-{r}"), gate_out)
-
-        def micro_batch(df, batch_id):
-            with tr.span("streaming", "merge_batch"):
-                inc.merge_batch(spark, state, df.select("doc_id", "text"))
-            with tr.span("text", "ingest_gate"):
-                gate(df, batch_id)
-
-        query = (
-            spark.readStream.schema(self.DOC_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(source)
-            .writeStream.option("checkpointLocation", self.path(f"ckpt-{r}"))
-            .foreachBatch(micro_batch)
-            .start()
-        )
+        self.gate = corpus_filter_dedup_sink(self.path(f"gate-state-{r}"), gate_out)
+        self.batch_id = 0
+        query = inc.stream_merge(spark, state, source, self.path(f"ckpt-{r}"))
         try:
             query.processAllAvailable()
         finally:
@@ -445,7 +466,7 @@ class CrawlIngest(Workload):
 
         spark = self.spark
         union = self.base_df.select("doc_id", "text").unionByName(
-            spark.read.schema(self.DOC_SCHEMA).parquet(self.path("shards")).select("doc_id", "text"))
+            spark.read.schema(inc.DOC_SCHEMA).parquet(self.path("shards")))
         inc.init_state(spark, self.path("rebuild"), union)
         got = inc.stored_candidates(spark, self.state)
         want = inc.stored_candidates(spark, self.path("rebuild"))
