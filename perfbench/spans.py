@@ -96,21 +96,25 @@ class Tracer:
 
     # ------------------------------------------------------------ results
 
-    def self_times(self) -> dict[str, float]:
-        """Per layer: span time minus the part covered by child spans."""
+    def self_times(self, name: str | None = None) -> dict[str, float]:
+        """Per layer: span time minus the part covered by child spans;
+        with ``name``, only the spans of that name."""
         children = defaultdict(list)
         for s in self.spans:
             if s["parent"] is not None:
                 children[s["parent"]].append(s)
         out: dict[str, float] = defaultdict(float)
         for s in self.spans:
-            if s["end"] is None:
+            if s["end"] is None or name not in (None, s["name"]):
                 continue
             covered = _union_length(
                 [(c["start"], c["end"]) for c in children[s["id"]] if c["end"] is not None]
             )
             out[s["layer"]] += (s["end"] - s["start"]) - covered
         return out
+
+    def self_time(self, layer: str, name: str) -> float:
+        return self.self_times(name).get(layer, 0.0)
 
     def total(self, layer: str, name: str | None = None) -> float:
         return sum(

@@ -2,10 +2,11 @@
 
 Each workload has ``setup`` (inputs, one-off artifacts, codegen and JIT
 warm-up; untimed), ``round`` (a fixed amount of work; returns ``(op,
-seconds)`` for every op it ran), ``check`` (output verification after the
-timed phase, untimed; returns the op names whose outputs were wrong) and
-``layers`` (the per-layer numbers of a traced run). Closed loop, one
-client: an op starts only after the previous one has finished.
+seconds)`` for every op it ran, with the same op names in every round),
+``check`` (output verification after the timed phase, untimed; returns
+the op names whose outputs were wrong) and ``layers`` (the per-layer
+numbers of a traced run). Closed loop, one client: an op starts only
+after the previous one has finished.
 
 Every op is forced through the noop sink or a real parquet write, so
 timings cover the distributed plan, not row shipping to the driver.
@@ -13,6 +14,7 @@ timings cover the distributed plan, not row shipping to the driver.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import random
@@ -56,6 +58,14 @@ class Workload:
         self.spark = ctx.spark
         self.tr = ctx.tracer
         self.inputs: dict[str, dict] = {}
+        self.setup_phases: dict[str, float] = {}
+
+    @contextlib.contextmanager
+    def phase(self, name: str):
+        """Time one part of the setup (goes to the detail line)."""
+        t0 = time.perf_counter()
+        yield
+        self.setup_phases[name] = time.perf_counter() - t0
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.ctx.run_dir, *parts)
@@ -63,6 +73,11 @@ class Workload:
     def note_input(self, name: str, rows: int, path: str) -> None:
         size = dir_bytes_files(path)[0] if os.path.isdir(path) else os.path.getsize(path)
         self.inputs[name] = {"rows": rows, "bytes": size}
+
+    def op_latencies(self, ops: list[tuple[str, float]]) -> list[float]:
+        """The op seconds ``op_p50_s`` and ``op_tail_s`` are taken over:
+        here, every op."""
+        return [s for _, s in ops]
 
 
 # --------------------------------------------------------------------- olap
@@ -78,7 +93,8 @@ class Olap(Workload):
         import __spark_entry__ as entry
 
         self.sf_dir = self.path("sf")
-        rows = datagen.write_star(self.sf_dir, self.ctx.seed, self.ctx.size("olap_sf"))
+        with self.phase("inputs"):
+            rows = datagen.write_star(self.sf_dir, self.ctx.seed, self.ctx.size("olap_sf"))
         for t, n in rows.items():
             self.note_input(t, n, os.path.join(self.sf_dir, f"{t}.parquet"))
         self.queries = {n: entry.queries()[n] for n in OLAP_QUERIES}
@@ -86,9 +102,10 @@ class Olap(Workload):
         # warm-up: every query once; the collected outputs are what check()
         # compares to the oracle (the queries are deterministic)
         self.outputs = {}
-        for name, fn in self.queries.items():
-            sdf = fn(self.spark, self.sf_dir)
-            self.outputs[name] = (sdf.schema, sdf.toPandas())
+        with self.phase("warm_up"):
+            for name, fn in self.queries.items():
+                sdf = fn(self.spark, self.sf_dir)
+                self.outputs[name] = (sdf.schema, sdf.toPandas())
 
     def round(self) -> list[tuple[str, float]]:
         from spider_spark.catalog import Catalog
@@ -150,42 +167,90 @@ class Olap(Workload):
 
 
 class WebtextBuild(Workload):
-    """One offline training-set build per op: exact dedup -> the
-    program's near-dup clusters (``materialized_clusters``: MinHash -> LSH
-    candidates -> connected components, each stored through the snapshot
-    store) -> quality and Gopher filters -> embedding SemDeDup (IVF coarse
+    """The crawl-to-training-set pipeline. A round first ingests the crawl:
+    the program's ``stream_merge`` query reads the parquet shards, one
+    micro-batch per shard (one op each), merges each into the incremental
+    LSH candidate index (``merge_batch``) and passes it through the
+    ``corpus_filter_dedup_sink`` ingest gate. It then builds the training
+    set over the whole corpus (one op): exact dedup -> the program's
+    near-dup clusters (``materialized_clusters``: MinHash -> LSH candidates
+    -> connected components, each stored through the snapshot store) ->
+    quality and Gopher filters -> embedding SemDeDup (IVF coarse
     quantizer) -> tokenize/chunk -> partitioned parquet write."""
 
     name = "webtext_build"
 
     def setup(self) -> None:
-        c = self.ctx
+        from spider_spark.streaming import incremental_index as inc
+
+        c, tr = self.ctx, self.tr
         self.sf_dir = self.path("sf")
+        t0 = time.perf_counter()
         docs = datagen.documents(c.seed, c.size("web_base_docs"), c.size("web_k"))
         datagen.write_table(self.sf_dir, "documents", docs)
         self.note_input("documents", docs.num_rows, os.path.join(self.sf_dir, "documents.parquet"))
         self.n_docs = docs.num_rows
-        self.builds = 0
-        self.digest = None
-        if self.tr.traced:
+        # the crawl is the corpus's tail: it arrives as shards, and the docs
+        # just before it bootstrap the index, so streamed docs
+        # near-duplicate indexed docs and each other
+        self.n_shards = c.size("web_shards")
+        self.n_stream_docs = self.n_shards * c.size("web_shard_docs")
+        first_stream = docs.num_rows - self.n_stream_docs
+        base = docs.slice(first_stream - c.size("web_index_docs"), c.size("web_index_docs"))
+        stream = docs.slice(first_stream)
+        datagen.write_table(self.path("base"), "documents", base)
+        self.note_input("index_bootstrap_documents", base.num_rows,
+                        self.path("base", "documents.parquet"))
+        shards = datagen.write_stream_shards(self.path("shards"), stream, self.n_shards)
+        self.note_input("stream_documents", stream.num_rows, self.path("shards"))
+        os.makedirs(self.path("warm-shards"))
+        shutil.copy(shards[0], self.path("warm-shards"))
+        self.base_df = self.spark.read.parquet(self.path("base", "documents.parquet"))
+        # stream_merge reads (doc_id, text) only; the gate also needs the
+        # crawl metadata, joined back per batch
+        self.meta = self.spark.read.parquet(self.path("shards")).drop("text")
+        self.setup_phases["inputs"] = time.perf_counter() - t0
+        with self.phase("init_state"):
+            inc.init_state(self.spark, self.path("state0"), self.base_df.select("doc_id", "text"))
+        if tr.traced:
             self.trace_program()
-        # warm-up (codegen, JIT, Python workers): the same build over a
-        # small corpus of another seed, so it costs less than a full build
-        warm = self.path("warm")
-        datagen.write_table(warm, "documents", datagen.documents(c.seed + 1, c.size("web_warm_docs"), 1))
-        self.run_build(warm)
+        merge_batch = inc.merge_batch
+
+        def merge_then_gate(spark, state_path, batch_docs):
+            with tr.span("streaming", "merge_batch"):
+                new_pairs = merge_batch(spark, state_path, batch_docs)
+            with tr.span("text", "ingest_gate"):
+                self.gate(batch_docs.join(self.meta, "doc_id"), self.batch_id)
+            self.batch_id += 1
+            return new_pairs
+
+        inc.merge_batch = merge_then_gate  # what stream_merge's foreachBatch calls
+        self.ingests = self.builds = 0
+        self.digest = None
+        # warm-up (codegen, JIT, Python workers): one micro-batch, and the
+        # build over a small corpus of another seed, so it costs less than
+        # a round
+        with self.phase("warm_up_ingest"):
+            self.ingest(self.path("warm-shards"))
+        with self.phase("warm_up_build"):
+            warm = self.path("warm")
+            datagen.write_table(warm, "documents", datagen.documents(c.seed + 1, c.size("web_warm_docs"), 1))
+            self.run_build(warm)
 
     def trace_program(self) -> None:
-        """Spans around the calls the program makes itself inside
-        ``materialized_clusters``: the two store artifacts (with hit/miss
+        """Spans around the calls the program makes itself: inside
+        ``materialized_clusters`` the two store artifacts (with hit/miss
         counts), MinHash signatures, LSH candidates and connected
-        components; and the coarse quantizer inside SemDeDup."""
+        components; inside ``merge_batch`` the batch signatures and the
+        Jaccard estimate of new pairs; and the coarse quantizer inside
+        SemDeDup."""
         from pyspark.sql import functions as F
 
         from spider_spark import store
         from spider_spark.dedup import minhash, semantic
         from spider_spark.graph import algorithms
         from spider_spark.graph.algorithms import SMALL_CC_EDGES
+        from spider_spark.streaming import incremental_index as inc
 
         tr = self.tr
         materialize_once = store.materialize_once
@@ -213,14 +278,59 @@ class WebtextBuild(Workload):
         store.materialize_once = counted_materialize_once
         tr.wrap(minhash, "minhash_signatures", "dedup", "signature")
         tr.wrap(minhash, "lsh_candidates_est", "dedup", "candidate", probe=count_candidates)
+        tr.wrap(inc, "minhash_signatures", "dedup", "signature")
+        tr.wrap(inc, "estimate_jaccard", "dedup", "candidate")
         tr.wrap(algorithms, "connected_components", "graph", "connected_components", probe=count_edges)
         tr.wrap(semantic, "train_centroids", "similarity", "train_centroids", pin=False)
 
+    def ingest(self, source: str) -> list[tuple[str, float]]:
+        """Stream every shard under ``source`` into a fresh copy of the
+        bootstrapped index; one ``micro_batch_<i>`` op per shard."""
+        from spider_spark.streaming import incremental_index as inc
+        from spider_spark.streaming.ops import corpus_filter_dedup_sink
+
+        spark, tr = self.spark, self.tr
+        self.ingests += 1
+        r = self.ingests
+        self.state = state = self.path(f"state-{r}")
+        shutil.copytree(self.path("state0"), state)
+        gate_out = self.path(f"gate-{r}")
+        self.gate = corpus_filter_dedup_sink(self.path(f"gate-state-{r}"), gate_out)
+        self.batch_id = 0
+        query = inc.stream_merge(spark, state, source, self.path(f"ckpt-{r}"))
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+        lat = []
+        for p in query.recentProgress:
+            if not p.numInputRows:
+                continue
+            d = p.durationMs
+            lat.append((f"micro_batch_{len(lat)}", d.get("triggerExecution", 0) / 1e3))
+            if tr.traced:
+                tr.add("streaming.batch_s", d.get("triggerExecution", 0) / 1e3)
+                tr.add("streaming.plan_s", (d.get("queryPlanning", 0) + d.get("getBatch", 0)) / 1e3)
+                tr.add("streaming.commit_s", (d.get("walCommit", 0) + d.get("commitOffsets", 0)) / 1e3)
+        if tr.traced:
+            base = spark.read.parquet(os.path.join(self.path("state0"), "candidates")).count()
+            tr.add("streaming.state_rows", spark.read.parquet(os.path.join(self.state, "postings")).count())
+            tr.add("streaming.new_pairs", inc.stored_candidates(spark, self.state).count() - base)
+            b, f = dir_bytes_files(gate_out)
+            tr.add("sinks.bytes_written", b)
+            tr.add("sinks.files_written", f)
+            tr.add("text.rows_out", spark.read.parquet(gate_out).count())
+        for d in (f"ckpt-{r}", f"gate-state-{r}", f"gate-{r}", f"state-{r - 1}"):
+            shutil.rmtree(self.path(d), ignore_errors=True)
+        return lat
+
     def run_build(self, sf_dir: str) -> float:
         """One build of ``sf_dir`` into a fresh output and artifact store;
-        returns its seconds. The output of the last build is kept."""
+        returns its seconds. Only the output of the last build is kept."""
         from spider_spark import store
 
+        if self.builds:
+            shutil.rmtree(self.out)
         self.builds += 1
         self.out = self.path(f"train-{self.builds}")
         store.CACHE_ROOT = self.path(f"store-{self.builds}")
@@ -299,11 +409,37 @@ class WebtextBuild(Workload):
             tr.add("text.tokens_out", t.t or 0)
 
     def round(self) -> list[tuple[str, float]]:
-        if self.builds:
-            shutil.rmtree(self.out)
-        return [("build", self.run_build(self.sf_dir))]
+        ops = self.ingest(self.path("shards"))
+        return ops + [("build", self.run_build(self.sf_dir))]
+
+    def op_latencies(self, ops: list[tuple[str, float]]) -> list[float]:
+        """``op_p50_s`` here is the ingest latency: micro-batches only (the
+        build is one op per round, read through ``wall_s``)."""
+        return [s for name, s in ops if name.startswith("micro_batch")]
 
     def check(self) -> list[str]:
+        return self.check_index() + self.check_build()
+
+    def check_index(self) -> list[str]:
+        """The stored candidates after the last ingest equal an uncapped
+        full rebuild over the union corpus (the incremental-index
+        invariant)."""
+        from spider_spark.streaming import incremental_index as inc
+
+        spark = self.spark
+        union = self.base_df.select("doc_id", "text").unionByName(
+            spark.read.schema(inc.DOC_SCHEMA).parquet(self.path("shards")))
+        inc.init_state(spark, self.path("rebuild"), union)
+        got = inc.stored_candidates(spark, self.state)
+        want = inc.stored_candidates(spark, self.path("rebuild"))
+        n_got, n_want = got.count(), want.count()
+        diff = got.exceptAll(want).count() + want.exceptAll(got).count()
+        if diff or n_got != n_want or not n_want:
+            print(f"index check: stored {n_got} vs rebuild {n_want}, {diff} differ")
+            return [f"micro_batch_{i}" for i in range(self.n_shards)]
+        return []
+
+    def check_build(self) -> list[str]:
         """Invariants of the last written training set: it keeps some
         documents and drops some, has no duplicate ids or texts, every
         kept document passes the quality gate, and token and chunk counts
@@ -333,165 +469,39 @@ class WebtextBuild(Workload):
         ok = (0 < r.rows < self.n_docs and r.rows == r.ids == r.texts
               and not r.bad_counts and not low)
         if not ok:
-            print(f"webtext check: {r}, {low} below the quality gate")
+            print(f"build check: {r}, {low} below the quality gate")
         return [] if ok else ["build"]
 
     def layers(self, ev) -> dict[str, float]:
-        c, st, n = self.tr.counts, self.tr.self_times(), self.ctx.timed_rounds
+        tr, c, n = self.tr, self.tr.counts, self.ctx.timed_rounds
+        st = tr.self_times()
         return {
             "text.self_s": st.get("text", 0.0) / n,
             "text.rows_out": c["text.rows_out"] / n,
             "text.tokens_out": c["text.tokens_out"] / n,
-            "dedup.signature_s": self.tr.total("dedup", "signature") / n,
-            "dedup.candidate_s": (self.tr.total("dedup", "candidate")
-                                  - self.tr.total("dedup", "signature")) / n,
+            "dedup.signature_s": tr.total("dedup", "signature") / n,
+            "dedup.candidate_s": tr.self_time("dedup", "candidate") / n,
             "dedup.candidate_pairs": c["dedup.candidate_pairs"] / n,
             "dedup.useful_pair_ratio": c["dedup.useful_pairs"] / max(1, c["dedup.candidate_pairs"]),
             "graph.self_s": st.get("graph", 0.0) / n,
             "graph.rounds": ev.get("graph", {}).get("jobs", 0.0) / n,
             "graph.driver_twin": c["graph.driver_twin"] / n,
-            "similarity.build_s": self.tr.total("similarity", "train_centroids") / n,
-            "similarity.probe_s": (self.tr.total("similarity", "semantic_dedup")
-                                   - self.tr.total("similarity", "train_centroids")) / n,
+            "similarity.build_s": tr.total("similarity", "train_centroids") / n,
+            "similarity.probe_s": tr.self_time("similarity", "semantic_dedup") / n,
             "similarity.candidates_per_query": c["similarity.compared"] / max(1, c["similarity.queries"]),
             "store.build_s": st.get("store", 0.0) / n,
             "store.hits": c["store.hits"] / n,
             "store.misses": c["store.misses"] / n,
             "store.bytes": c["store.bytes"] / n,
-            "sinks.write_s": self.tr.total("sinks") / n,
-            "sinks.bytes_written": c["sinks.bytes_written"] / n,
-            "sinks.files_written": c["sinks.files_written"] / n,
-        }
-
-
-# -------------------------------------------------------------- crawl_ingest
-
-
-class CrawlIngest(Workload):
-    """A seeded document stream in parquet shards, ingested by the
-    program's ``stream_merge`` query: each shard is one micro-batch that is
-    merged into the incremental LSH candidate index (``merge_batch``) and
-    then passed through the ``corpus_filter_dedup_sink`` ingest gate. One op
-    is one micro-batch; a round streams every shard from a fresh copy of
-    the bootstrapped index state."""
-
-    name = "crawl_ingest"
-
-    def setup(self) -> None:
-        from spider_spark.streaming import incremental_index as inc
-
-        c, tr = self.ctx, self.tr
-        n_base, n_shards, per_shard = (
-            c.size("crawl_base_docs"), c.size("crawl_shards"), c.size("crawl_shard_docs"))
-        # one corpus, so stream docs near-duplicate base docs and each other
-        corpus = datagen.documents(c.seed, n_base + n_shards * per_shard, 1)
-        base, stream = corpus.slice(0, n_base), corpus.slice(n_base)
-        datagen.write_table(self.path("base"), "documents", base)
-        self.note_input("base_documents", base.num_rows, self.path("base", "documents.parquet"))
-        shards = datagen.write_stream_shards(self.path("shards"), stream, n_shards)
-        self.note_input("stream_documents", stream.num_rows, self.path("shards"))
-        self.n_stream_docs = stream.num_rows
-        os.makedirs(self.path("warm-shards"))
-        shutil.copy(shards[0], self.path("warm-shards"))
-        self.base_df = self.spark.read.parquet(self.path("base", "documents.parquet"))
-        # stream_merge reads (doc_id, text) only; the gate also needs the
-        # crawl metadata, joined back per batch
-        self.meta = self.spark.read.parquet(self.path("shards")).drop("text")
-        with tr.span("dedup", "init_state"):
-            inc.init_state(self.spark, self.path("state0"), self.base_df.select("doc_id", "text"))
-        if tr.traced:
-            tr.wrap(inc, "minhash_signatures", "dedup", "signature")
-            tr.wrap(inc, "estimate_jaccard", "dedup", "candidate")
-        merge_batch = inc.merge_batch
-
-        def merge_then_gate(spark, state_path, batch_docs):
-            with tr.span("streaming", "merge_batch"):
-                new_pairs = merge_batch(spark, state_path, batch_docs)
-            with tr.span("text", "ingest_gate"):
-                self.gate(batch_docs.join(self.meta, "doc_id"), self.batch_id)
-            self.batch_id += 1
-            return new_pairs
-
-        inc.merge_batch = merge_then_gate  # what stream_merge's foreachBatch calls
-        self.rounds_run = 0
-        self.ingest(self.path("warm-shards"))  # warm-up: one micro-batch
-
-    def ingest(self, source: str) -> list[tuple[str, float]]:
-        from spider_spark.streaming import incremental_index as inc
-        from spider_spark.streaming.ops import corpus_filter_dedup_sink
-
-        spark, tr = self.spark, self.tr
-        self.rounds_run += 1
-        r = self.rounds_run
-        self.state = state = self.path(f"state-{r}")
-        shutil.copytree(self.path("state0"), state)
-        gate_out = self.path(f"gate-{r}")
-        self.gate = corpus_filter_dedup_sink(self.path(f"gate-state-{r}"), gate_out)
-        self.batch_id = 0
-        query = inc.stream_merge(spark, state, source, self.path(f"ckpt-{r}"))
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        lat = []
-        for p in query.recentProgress:
-            if not p.numInputRows:
-                continue
-            d = p.durationMs
-            lat.append(("micro_batch", d.get("triggerExecution", 0) / 1e3))
-            if tr.traced:
-                tr.add("streaming.batch_s", d.get("triggerExecution", 0) / 1e3)
-                tr.add("streaming.plan_s", (d.get("queryPlanning", 0) + d.get("getBatch", 0)) / 1e3)
-                tr.add("streaming.commit_s", (d.get("walCommit", 0) + d.get("commitOffsets", 0)) / 1e3)
-        if tr.traced:
-            base = spark.read.parquet(os.path.join(self.path("state0"), "candidates")).count()
-            tr.add("streaming.state_rows", spark.read.parquet(os.path.join(self.state, "postings")).count())
-            tr.add("streaming.new_pairs", inc.stored_candidates(spark, self.state).count() - base)
-            b, f = dir_bytes_files(gate_out)
-            tr.add("sinks.bytes_written", b)
-            tr.add("sinks.files_written", f)
-            tr.add("text.rows_out", spark.read.parquet(gate_out).count())
-        for d in (f"ckpt-{r}", f"gate-state-{r}", f"gate-{r}", f"state-{r - 1}"):
-            shutil.rmtree(self.path(d), ignore_errors=True)
-        return lat
-
-    def round(self) -> list[tuple[str, float]]:
-        return self.ingest(self.path("shards"))
-
-    def check(self) -> list[str]:
-        """The stored candidates after the last round equal an uncapped
-        full rebuild over the union corpus (the incremental-index
-        invariant)."""
-        from spider_spark.streaming import incremental_index as inc
-
-        spark = self.spark
-        union = self.base_df.select("doc_id", "text").unionByName(
-            spark.read.schema(inc.DOC_SCHEMA).parquet(self.path("shards")))
-        inc.init_state(spark, self.path("rebuild"), union)
-        got = inc.stored_candidates(spark, self.state)
-        want = inc.stored_candidates(spark, self.path("rebuild"))
-        n_got, n_want = got.count(), want.count()
-        diff = got.exceptAll(want).count() + want.exceptAll(got).count()
-        if diff or n_got != n_want or not n_want:
-            print(f"crawl check: stored {n_got} vs rebuild {n_want}, {diff} differ")
-            return ["micro_batch"]
-        return []
-
-    def layers(self, ev) -> dict[str, float]:
-        c, n = self.tr.counts, self.ctx.timed_rounds
-        return {
-            "text.self_s": self.tr.self_times().get("text", 0.0) / n,
-            "text.rows_out": c["text.rows_out"] / n,
-            "dedup.signature_s": self.tr.total("dedup", "signature") / n,
-            "dedup.candidate_s": self.tr.total("dedup", "candidate") / n,
             "streaming.batch_s": c["streaming.batch_s"] / n,
             "streaming.plan_s": c["streaming.plan_s"] / n,
             "streaming.commit_s": c["streaming.commit_s"] / n,
             "streaming.state_rows": c["streaming.state_rows"] / n,
             "streaming.new_pairs": c["streaming.new_pairs"] / n,
+            "sinks.write_s": tr.total("sinks") / n,
             "sinks.bytes_written": c["sinks.bytes_written"] / n,
             "sinks.files_written": c["sinks.files_written"] / n,
         }
 
 
-WORKLOADS = {w.name: w for w in (Olap, WebtextBuild, CrawlIngest)}
+WORKLOADS = {w.name: w for w in (Olap, WebtextBuild)}
