@@ -34,7 +34,11 @@ from spider_spark.text import analysis as TX
 from spider_spark.text import crawl as CW
 from spider_spark.text import pipeline as TP
 from spider_spark.dedup.exact import dedup_exact
-from spider_spark.dedup.jaccard import dedup_incremental, dedup_ngram_jaccard
+from spider_spark.dedup.jaccard import (
+    MAX_POSTING_LEN,
+    dedup_incremental,
+    dedup_ngram_jaccard,
+)
 from spider_spark.dedup.minhash import dedup_minhash_lsh
 from spider_spark.dedup.simhash import dedup_simhash
 from spider_spark.dedup.embedding import embedding_neardup
@@ -2416,13 +2420,14 @@ def oracle_sql() -> dict[str, str]:
                    round(exp(nlp), 2) AS ppl
             FROM per_doc
         """,
-        "sparse_cosine_sim": """
+        "sparse_cosine_sim": f"""
             WITH w AS (SELECT doc_id,
                               unnest(string_split_regex(trim(text), '\\s+')) AS t
                        FROM documents WHERE text IS NOT NULL),
             tf0 AS (SELECT doc_id, t, count(*) AS c FROM w WHERE t <> ''
                     GROUP BY 1, 2),
-            keep AS (SELECT t FROM tf0 GROUP BY t HAVING count(*) <= 1024),
+            keep AS (SELECT t FROM tf0 GROUP BY t
+                    HAVING count(*) <= {MAX_POSTING_LEN}),
             tf AS (SELECT tf0.* FROM tf0 JOIN keep USING (t)),
             nrm AS (SELECT doc_id, CAST(sum(c * c) AS BIGINT) AS s2
                     FROM tf GROUP BY 1),

@@ -5,6 +5,8 @@ Scale posture: AQE on (runtime coalesce + skew-join splitting), Arrow on
 local harness but overridable via env for a real cluster, and a modest
 broadcast threshold so dimension tables (region/nation/supplier/part/
 customer at typical SFs) broadcast instead of shuffling the fact side.
+The whole-stage codegen class cache holds the engine's plan working set,
+so a repeated op reuses its compiled classes instead of re-running Janino.
 """
 
 from __future__ import annotations
@@ -50,6 +52,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Scans: pack small files, keep splits executor-memory-friendly.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Generated-class cache (static conf, default 100 entries). The
+        # perfbench olap queries need 191 distinct classes and a
+        # webtext_build round 236, so at 100 the LRU evicts every class
+        # before its op comes round again and Janino recompiles it each
+        # time (~160 compiles per olap round; 0 at 1024).
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.driver.memory", os.environ.get("SPIDER_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Console progress bars write \r-frames that have corrupted every

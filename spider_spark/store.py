@@ -1,13 +1,14 @@
-"""Build-once snapshot artifacts keyed on (sf_dir, source mtime).
+"""Build-once snapshot artifacts keyed on (sf_dir, source mtime and size).
 
 A 100 TB pipeline materializes expensive shared relations — dedup
 cluster assignments, LSH candidate pairs, ANN indexes — exactly once
 per corpus snapshot; every consumer reads the stored table. This module
 owns the one pattern all of those share: a /tmp parquet table whose
-path embeds the source table's mtime (a regenerated corpus can never be
-served a stale artifact) and an algorithm version (bump on semantic
-change), written to a temp dir and renamed in so a concurrent builder
-can never expose a partial table.
+path embeds the source table's nanosecond mtime and byte size (a
+corpus regenerated within the same second can never be served a stale
+artifact) and an algorithm version (bump on semantic change), written
+to a temp dir and renamed in so a concurrent builder can never expose
+a partial table.
 """
 
 from __future__ import annotations
@@ -25,7 +26,8 @@ def snapshot_path(
 ) -> str:
     src = os.path.join(sf_dir, f"{source_table}.parquet")
     try:
-        stamp = str(int(os.path.getmtime(src)))
+        st = os.stat(src)
+        stamp = f"{st.st_mtime_ns}_{st.st_size}"
     except OSError:
         stamp = "0"
     base = os.path.basename(os.path.normpath(sf_dir))

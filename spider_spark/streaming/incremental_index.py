@@ -56,6 +56,11 @@ from spider_spark.dedup.minhash import (
 )
 
 DOC_SCHEMA = "doc_id bigint, text string"
+# Declared state schemas: a schema-less parquet read runs one footer
+# inference job per call, twice per micro-batch.
+SIG_SCHEMA = "doc_id bigint, sig array<bigint>"
+POSTINGS_SCHEMA = "doc_id bigint, band int, bh bigint"
+CANDIDATES_SCHEMA = "doc_id_1 bigint, doc_id_2 bigint, est_jaccard double"
 
 
 def _p(state_path: str, name: str) -> str:
@@ -69,10 +74,10 @@ def init_state(spark: SparkSession, state_path: str, base_docs: DataFrame) -> No
 
     sig = minhash_signatures(base_docs)
     sig.write.mode("overwrite").parquet(_p(state_path, "signatures"))
-    sig = spark.read.parquet(_p(state_path, "signatures"))
+    sig = spark.read.schema(SIG_SCHEMA).parquet(_p(state_path, "signatures"))
     post = band_postings(sig)
     post.write.mode("overwrite").parquet(_p(state_path, "postings"))
-    post = spark.read.parquet(_p(state_path, "postings"))
+    post = spark.read.schema(POSTINGS_SCHEMA).parquet(_p(state_path, "postings"))
     grouped = post.groupBy("band", "bh").agg(F.collect_list("doc_id").alias("ids"))
     pairs = pair_explode(grouped, cap=None).distinct()
     estimate_jaccard(pairs, sig).write.mode("overwrite").parquet(
@@ -91,13 +96,11 @@ def merge_batch(
 
     sig_new = minhash_signatures(batch_docs).localCheckpoint()
     if not sig_new.head(1):
-        return spark.createDataFrame(
-            [], "doc_id_1 bigint, doc_id_2 bigint, est_jaccard double"
-        )
+        return spark.createDataFrame([], CANDIDATES_SCHEMA)
     post_new = band_postings(sig_new).localCheckpoint()
 
-    stored_post = spark.read.parquet(_p(state_path, "postings"))
-    stored_sig = spark.read.parquet(_p(state_path, "signatures"))
+    stored_post = spark.read.schema(POSTINGS_SCHEMA).parquet(_p(state_path, "postings"))
+    stored_sig = spark.read.schema(SIG_SCHEMA).parquet(_p(state_path, "signatures"))
 
     # cross pairs: probe the stored inverted index on the batch's keys
     cross = (
@@ -154,4 +157,4 @@ def stream_merge(
 
 
 def stored_candidates(spark: SparkSession, state_path: str) -> DataFrame:
-    return spark.read.parquet(_p(state_path, "candidates"))
+    return spark.read.schema(CANDIDATES_SCHEMA).parquet(_p(state_path, "candidates"))

@@ -269,6 +269,7 @@ def stream_static_enrich(events: DataFrame, user_dim: DataFrame) -> DataFrame:
 # of the read-then-overwrite race a rewritten state file would have.
 BLOOM_GATE_BITS = 1 << 17
 BLOOM_GATE_HASHES = 5
+BLOOM_BITS_SCHEMA = "bit bigint"  # what doc_bloom_bits writes
 
 
 def doc_bloom_bits(fps: DataFrame, fp_col: str = "fp") -> DataFrame:
@@ -336,7 +337,7 @@ def corpus_filter_dedup_sink(state_dir: str, out_dir: str):
             .dropDuplicates(["fp"])
         )
         try:
-            bits = spark.read.parquet(bits_path).distinct()
+            bits = spark.read.schema(BLOOM_BITS_SCHEMA).parquet(bits_path).distinct()
         except AnalysisException:
             bits = None
         if bits is not None:

@@ -63,7 +63,8 @@ def sparse_cosine_pairs(
     # a partitioned count window on the term — same shuffle key the
     # posting build needs anyway
     df_t = F.count("*").over(Window.partitionBy("t"))
-    tf = tf.withColumn("_df", df_t).filter(F.col("_df") <= MAX_DF).drop("_df")
+    max_df = cap if cap is not None else MAX_DF
+    tf = tf.withColumn("_df", df_t).filter(F.col("_df") <= max_df).drop("_df")
     s2 = F.sum(F.col("c") * F.col("c")).over(Window.partitionBy("doc_id"))
     postings = tf.select("doc_id", "t", "c", s2.alias("s2"))
     cand = pair_explode(

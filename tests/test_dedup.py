@@ -9,7 +9,12 @@ from pyspark.sql import functions as F
 
 from spider_spark.dedup.exact import exact_dedup
 from spider_spark.dedup.jaccard import ngram_jaccard_pairs
-from spider_spark.dedup.minhash import minhash_lsh_pairs
+from spider_spark.dedup.minhash import (
+    NUM_PERM,
+    band_postings,
+    minhash_lsh_pairs,
+    minhash_signatures,
+)
 from spider_spark.dedup.simhash import simhash_pairs
 from spider_spark.dedup.embedding import (
     cosine_neardup_pairs,
@@ -94,6 +99,36 @@ def test_minhash_estimate_tracks_true_jaccard(corpus):
     assert both
     for p in both:
         assert abs(true_j[p] - est_j[p]) < 0.25, (p, true_j[p], est_j[p])
+
+
+def _column_band_postings(sig, bands):
+    """The Column-built banding that band_postings' SQL string replaces."""
+    r = NUM_PERM // bands
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(*[F.col("sig")[b * r + i] for i in range(r)]).alias("bh"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select("doc_id", F.explode(band_arr).alias("b")).select(
+        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    )
+
+
+@pytest.mark.parametrize("bands", [32, 16])
+def test_band_postings_equals_column_built(spark, cat, bands):
+    """The one-expression banding emits bit-identical (doc_id, band, bh)
+    rows under the same schema as the Column-built construction."""
+    sig = minhash_signatures(cat.documents).localCheckpoint()
+    fast = band_postings(sig, bands)
+    ref = _column_band_postings(sig, bands)
+    assert fast.schema == ref.schema
+    assert fast.count() == ref.count() == sig.count() * bands > 0
+    assert fast.exceptAll(ref).count() == 0
+    assert ref.exceptAll(fast).count() == 0
 
 
 def test_simhash_finds_neardups(corpus):

@@ -28,9 +28,39 @@ def test_materialize_once_builds_exactly_once(spark, sf_dir, tmp_path, monkeypat
 
 def test_snapshot_path_embeds_source_mtime(sf_dir):
     p1 = snapshot_path(sf_dir, "t", 1)
-    src = os.path.join(sf_dir, "documents.parquet")
-    assert str(int(os.path.getmtime(src))) in p1
+    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    assert f"{st.st_mtime_ns}_{st.st_size}" in p1
     assert p1 != snapshot_path(sf_dir, "t", 2)
+
+
+def test_source_regenerated_within_a_second_builds_fresh(spark, tmp_path, monkeypatch):
+    """A source rewritten inside the same whole second (same integer
+    mtime) must not be served the artifact of its previous contents."""
+    import spider_spark.store as store
+
+    monkeypatch.setattr(store, "CACHE_ROOT", str(tmp_path / "idx"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "documents.parquet"
+    sec = 1_700_000_000 * 10**9
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3)
+
+    def regenerate(data: bytes, mtime_ns: int) -> None:
+        src.write_bytes(data)
+        os.utime(src, ns=(mtime_ns, mtime_ns))
+        materialize_once(spark, str(sf), "t", 1, build).collect()
+
+    regenerate(b"v1", sec)
+    regenerate(b"v1", sec)
+    assert len(calls) == 1, "an unchanged source must serve the stored artifact"
+    regenerate(b"v22", sec)  # same mtime to the ns, different size
+    assert len(calls) == 2
+    regenerate(b"v33", sec + 250_000_000)  # same size and whole second
+    assert len(calls) == 3
 
 
 def test_phash_fingerprints_stored_equals_live(spark, sf_dir, tmp_path, monkeypatch):
