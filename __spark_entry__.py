@@ -74,6 +74,10 @@ from spider_spark.text.lm import (
 )
 from spider_spark.text.pii import pii_redaction
 from spider_spark.graph.algorithms import (
+    DAMPING,
+    HITS_ITERS,
+    LPA_ITERS,
+    PAGERANK_ITERS,
     cluster_representatives,
     cluster_size_histogram,
     dedup_clusters,
@@ -95,16 +99,14 @@ from spider_spark.sources.warc import warc_parse
 from spider_spark.operators import analytics2 as A2
 from spider_spark.operators import sketches as SK
 from spider_spark.similarity.vectors import embedding_centroids, vector_quantize
-from spider_spark.sinks.writers import zorder_layout
+from spider_spark.sinks.writers import ZBITS, zorder_layout
 from spider_spark.operators import cdc as CDC
 
-def _pagerank_sql(
-    edges_sql: str, out_node: str, iters: int = 10, damping: float = 0.85
-) -> str:
+def _pagerank_sql(edges_sql: str, out_node: str) -> str:
     """DuckDB mirror of graph.algorithms.pagerank: the fixed-iteration
     loop unrolled into one CTE chain per round (rank starts at 1.0;
-    rank' = (1-d) + d*(in_mass + dangling/n)). ``repr(1.0 - damping)``
-    reproduces the exact Python float Spark's F.lit(1.0 - damping)
+    rank' = (1-d) + d*(in_mass + dangling/n)). ``repr(1.0 - DAMPING)``
+    reproduces the exact Python float Spark's F.lit(1.0 - DAMPING)
     embeds, so both engines add the identical teleport constant."""
     parts = [
         f"WITH edges AS MATERIALIZED ({edges_sql})",
@@ -116,8 +118,8 @@ def _pagerank_sql(
     # 'e0' exponent forms parse as DOUBLE directly (a bare 17-digit
     # decimal literal would land in DECIMAL(18,17) and change the
     # arithmetic type lattice).
-    tele, damp = f"{1.0 - damping!r}e0", f"{damping!r}e0"
-    for i in range(1, iters + 1):
+    tele, damp = f"{1.0 - DAMPING!r}e0", f"{DAMPING!r}e0"
+    for i in range(1, PAGERANK_ITERS + 1):
         parts.append(
             f"m{i} AS MATERIALIZED (SELECT e.dst AS node, sum(r.rank / d.deg) AS in_mass"
             f" FROM edges e JOIN r{i - 1} r ON e.src = r.node"
@@ -136,7 +138,7 @@ def _pagerank_sql(
         )
     return (
         ",\n".join(parts)
-        + f"\nSELECT node AS {out_node}, round(rank, 4) AS rank FROM r{iters}"
+        + f"\nSELECT node AS {out_node}, round(rank, 4) AS rank FROM r{PAGERANK_ITERS}"
     )
 
 
@@ -144,8 +146,6 @@ def _trustrank_sql(
     edges_sql: str,
     seeds: list,
     out_node: str,
-    iters: int = 10,
-    damping: float = 0.85,
 ) -> str:
     """DuckDB mirror of graph.algorithms.trustrank: _pagerank_sql with a
     per-node teleport column (uniform over the seed whitelist) in place
@@ -164,8 +164,8 @@ def _trustrank_sql(
         "deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
         "r0 AS MATERIALIZED (SELECT node, tele, tele AS rank FROM nodes)",
     ]
-    tele, damp = f"{1.0 - damping!r}e0", f"{damping!r}e0"
-    for i in range(1, iters + 1):
+    tele, damp = f"{1.0 - DAMPING!r}e0", f"{DAMPING!r}e0"
+    for i in range(1, PAGERANK_ITERS + 1):
         parts.append(
             f"m{i} AS MATERIALIZED (SELECT e.dst AS node, sum(r.rank / d.deg) AS in_mass"
             f" FROM edges e JOIN r{i - 1} r ON e.src = r.node"
@@ -184,11 +184,11 @@ def _trustrank_sql(
         )
     return (
         ",\n".join(parts)
-        + f"\nSELECT node AS {out_node}, round(rank, 4) AS trust FROM r{iters}"
+        + f"\nSELECT node AS {out_node}, round(rank, 4) AS trust FROM r{PAGERANK_ITERS}"
     )
 
 
-def _hits_sql(edges_sql: str, out_node: str, iters: int = 8) -> str:
+def _hits_sql(edges_sql: str, out_node: str) -> str:
     """DuckDB mirror of graph.algorithms.hits: the fixed-iteration power
     loop unrolled (auth_i from hub_{i-1}, hub_i from the just-updated
     auth_i — same in-round sequencing as the Spark loop), normalised
@@ -200,7 +200,7 @@ def _hits_sql(edges_sql: str, out_node: str, iters: int = 8) -> str:
         " CAST(1 AS DOUBLE) AS auth FROM (SELECT src AS node FROM edges"
         " UNION SELECT dst FROM edges))",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, HITS_ITERS + 1):
         parts.append(
             f"a{i} AS MATERIALIZED (SELECT e.dst AS node, sum(s.hub) AS a"
             f" FROM edges e JOIN s{i - 1} s ON e.src = s.node GROUP BY e.dst)"
@@ -223,15 +223,15 @@ def _hits_sql(edges_sql: str, out_node: str, iters: int = 8) -> str:
         ",\n".join(parts)
         + f""",
         norms AS (SELECT sqrt(sum(hub * hub)) AS hn, sqrt(sum(auth * auth)) AS an
-                  FROM s{iters})
+                  FROM s{HITS_ITERS})
         SELECT node AS {out_node},
                round(hub / hn, 4) AS hub,
                round(auth / an, 4) AS auth
-        FROM s{iters} CROSS JOIN norms"""
+        FROM s{HITS_ITERS} CROSS JOIN norms"""
     )
 
 
-def _lpa_sql(string_edges_sql: str, iters: int = 5) -> str:
+def _lpa_sql(string_edges_sql: str) -> str:
     """DuckDB mirror of graph.algorithms.label_propagation over a
     string-keyed edge list: md5-derived numeric node ids (same scheme
     as the Spark side), synchronous min-label-tie-break label
@@ -249,7 +249,7 @@ def _lpa_sql(string_edges_sql: str, iters: int = 5) -> str:
         " (SELECT src, dst FROM e0 UNION ALL SELECT dst AS src, src AS dst FROM e0))",
         "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM bidir)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, LPA_ITERS + 1):
         parts.append(
             f"v{i} AS MATERIALIZED (SELECT b.src, l.label, count(*) AS n"
             f" FROM bidir b JOIN l{i - 1} l ON b.dst = l.node GROUP BY b.src, l.label)"
@@ -266,15 +266,15 @@ def _lpa_sql(string_edges_sql: str, iters: int = 5) -> str:
         )
     return (
         ",\n".join(parts)
-        + f"\nSELECT nm.domain, l.label AS community FROM l{iters} l"
+        + f"\nSELECT nm.domain, l.label AS community FROM l{LPA_ITERS} l"
         f" JOIN nm ON l.node = nm.node"
     )
 
 
-# DuckDB mirror of sinks.writers.morton_code (8-bit interleave).
+# DuckDB mirror of sinks.writers.morton_code (ZBITS-bit interleave).
 _MORTON_SQL = " | ".join(
     f"((((a >> {i}) % 2) << {2 * i}) | (((b >> {i}) % 2) << {2 * i + 1}))"
-    for i in range(8)
+    for i in range(ZBITS)
 )
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -913,7 +913,8 @@ def oracle_sql() -> dict[str, str]:
         "q7_nation_volume": """
             SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                    CAST(year(l_shipdate) AS BIGINT) AS l_year,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS volume
+                   CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                             AS DECIMAL(18,4))), 2) AS DOUBLE) AS volume
             FROM lineitem
             JOIN orders ON l_orderkey = o_orderkey
             JOIN supplier ON l_suppkey = s_suppkey
@@ -975,7 +976,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q15_top_supplier": """
             WITH rev AS (SELECT l_suppkey,
-                                round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
+                                CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                                          AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_revenue
                          FROM lineitem
                          WHERE l_shipdate >= TIMESTAMP '1997-01-01'
                            AND l_shipdate < TIMESTAMP '1997-04-01'
@@ -990,13 +992,15 @@ def oracle_sql() -> dict[str, str]:
                         WHERE p_brand = 'Brand#11'),
             a AS (SELECT l_partkey AS ap_key, 0.5 * avg(l_quantity) AS half_avg
                   FROM li GROUP BY l_partkey)
-            SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+            SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+                         / 7.0, 2) AS avg_yearly
             FROM li JOIN a ON l_partkey = ap_key
             WHERE l_quantity < half_avg
         """,
         "q22_dormant_customers": """
             SELECT c_nationkey, count(*) AS numcust,
-                   round(sum(c_acctbal), 2) AS totacctbal
+                   CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
+                       AS totacctbal
             FROM customer
             WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
               AND NOT EXISTS (SELECT 1 FROM orders

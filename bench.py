@@ -1,15 +1,15 @@
 """Headline benchmark: runs representative queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value" (total sec), "unit", "queries", "sf"}.
+JSON line: {"metric", "value" (total sec), "unit", "queries", "sf", "cores"}.
 
 Execution is forced through the noop sink (full materialisation, no
 driver-side collect), so timings measure the distributed plan, not
 row-shipping to the driver.
 
-Scaling evidence (north rule): run twice with different parallelism, e.g.
-  SPARK_GRAFT_CPUS=8 python bench.py
-  SPARK_GRAFT_CPUS=32 python bench.py
-and compare throughput; see BASELINE.md for recorded numbers.
+Speed claims are read from perfbench (``python3 perfbench/run.py``:
+interleaved parent/change pairs, end-to-end and per-layer metrics).
+Core and data scaling have their own scripts: tools/bench_scaling.py and
+tools/bench_data_scaling.py.
 """
 
 from __future__ import annotations
@@ -161,75 +161,6 @@ def main() -> None:
     cores = spark.sparkContext.defaultParallelism
     spark.stop()
 
-    # North-rule scaling evidence, embedded in the bench artifact: the
-    # SAME compute-bound job (amplified MinHash kernel — per-task compute
-    # dominates fixed overhead, unlike the sub-second suite queries) at
-    # two parallelism levels, min-of-2 per level. Suite totals at sf0.1
-    # measure the scheduling/codegen floor, not compute — see BASELINE.md
-    # §2 for the full interleaved protocol; disable with
-    # SPARK_GRAFT_SCALING=0 when iterating.
-    scaling = None
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        from spider_spark.catalog import Catalog
-        from tools.bench_scaling import job_minhash
-
-        levels, secs, rows = (8, 32), {}, 0
-        for lvl in levels:
-            s2 = get_spark(
-                f"bench-scaling-{lvl}",
-                master=f"local[{lvl}]",
-                shuffle_partitions=max(lvl, 8),
-            )
-            df, rows = job_minhash(Catalog(s2, sf_dir))
-            samples = []
-            for _ in range(3):  # first sample doubles as codegen warm-up
-                t0 = time.time()
-                force(df)
-                samples.append(time.time() - t0)
-            secs[lvl] = min(samples[1:])
-            s2.stop()
-        lo, hi = levels
-        tput = {lvl: rows / secs[lvl] for lvl in levels}
-        scaling = {
-            "job": "minhash_amplified",
-            "rows": rows,
-            f"sec_{lo}": round(secs[lo], 3),
-            f"sec_{hi}": round(secs[hi], 3),
-            f"rows_per_s_{lo}": round(tput[lo]),
-            f"rows_per_s_{hi}": round(tput[hi]),
-            "speedup": round(tput[hi] / tput[lo], 3),
-            "scaling_efficiency": round((tput[hi] / tput[lo]) / (hi / lo), 3),
-        }
-
-    # DATA-scaling evidence (round-3 verdict #1): the flagship dedup
-    # pipeline (MinHash → LSH → connected components) at 1×/4×/16×
-    # amplified corpus, fixed parallelism — runtime must grow ~linearly
-    # with data. Full 4-job interleaved curve: tools/bench_data_scaling.py
-    # (recorded in BASELINE.md §2b); this embeds the one-job version in
-    # the per-round artifact. Same kill switch as the core-scaling block.
-    data_scaling = None
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        from spider_spark.catalog import Catalog
-        from tools.bench_data_scaling import job_minhash_cc
-
-        s3 = get_spark("bench-data-scaling", shuffle_partitions=32)
-        cat3 = Catalog(s3, sf_dir)
-        force(job_minhash_cc(s3, cat3, 1))  # codegen warm-up
-        secs3: dict[int, float] = {}
-        for _ in range(2):  # interleaved min-of-2 per scale
-            for k in (1, 4, 16):
-                s3.catalog.clearCache()
-                t0 = time.time()
-                force(job_minhash_cc(s3, cat3, k))
-                secs3[k] = min(secs3.get(k, 1e9), time.time() - t0)
-        s3.stop()
-        data_scaling = {
-            "job": "minhash_lsh_cc",
-            "sec": {str(k): round(secs3[k], 3) for k in (1, 4, 16)},
-            "vs_linear_16x": round((secs3[16] / secs3[1]) / 16, 3),
-            "marginal_16_over_4": round(secs3[16] / secs3[4], 3),
-        }
-
     payload = json.dumps(
         {
             "metric": "headline_total",
@@ -238,8 +169,6 @@ def main() -> None:
             "queries": timings,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             "cores": cores,
-            "scaling": scaling,
-            "data_scaling": data_scaling,
         }
     )
     json.loads(payload)  # self-check: the artifact must round-trip

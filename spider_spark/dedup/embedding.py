@@ -27,9 +27,9 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def with_normed(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Add a float64 copy of the vector and its L2 norm (computed once)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+def with_normed(df: DataFrame) -> DataFrame:
+    """Add a float64 copy of ``embedding`` and its L2 norm (computed once)."""
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return df.withColumn("_v", v).withColumn("_norm", norm(F.col("_v")))
 
 
@@ -58,18 +58,18 @@ BLOCK_TARGET_ROWS = 4096
 
 
 def cosine_neardup_pairs_fast(
-    emb: DataFrame, threshold: float = COSINE_THRESHOLD, n_blocks: int | None = None
+    emb: DataFrame, threshold: float = COSINE_THRESHOLD
 ) -> DataFrame:
     """All-pairs cosine near-dup via a block-keyed distributed matmul.
 
     Exact all-pairs is inherently O(n²) compute; what must NOT be O(n)
     is any single machine's memory. Vectors are hash-assigned to
-    ``n_blocks`` blocks; each row is replicated once per partner block
-    (n_blocks copies — the standard triangle-join layout), keyed by the
+    nb blocks; each row is replicated once per partner block
+    (nb copies — the standard triangle-join layout), keyed by the
     unordered block pair, and each (bi, bj) group does ONE float64 BLAS
     matmul over two bounded blocks inside applyInPandas. The driver
-    never sees the table, every task holds ≤ 2·(n/n_blocks) vectors,
-    and the shuffle is n·n_blocks rows — choose n_blocks ≈ n/4096 and
+    never sees the table, every task holds ≤ 2·(n/nb) vectors,
+    and the shuffle is n·nb rows — nb ≈ n/BLOCK_TARGET_ROWS, and
     that is the O(n·√n̄)-ish transfer a blocked exact join costs.
     (For genuinely huge n, LSH-bucket first: spider_spark.similarity.lsh.)
 
@@ -83,12 +83,10 @@ def cosine_neardup_pairs_fast(
     emb = emb.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     ).select("vec_id", "embedding")
-    if n_blocks is None:
-        n = emb.count()  # one narrow scan; negligible next to O(n²) compute
-        # enough blocks to bound task memory AND to busy the cluster on
-        # small inputs (block-pair groups = nb(nb+1)/2 tasks)
-        n_blocks = max(1, -(-n // BLOCK_TARGET_ROWS), min(16, n // 256))
-    nb = int(n_blocks)
+    n = emb.count()  # one narrow scan; negligible next to O(n²) compute
+    # enough blocks to bound task memory AND to busy the cluster on
+    # small inputs (block-pair groups = nb(nb+1)/2 tasks)
+    nb = max(1, -(-n // BLOCK_TARGET_ROWS), min(16, n // 256))
 
     blk = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(nb)).cast("int")
     rep = (

@@ -8,14 +8,14 @@ from pyspark.sql import functions as F
 from spider_spark.catalog import Catalog
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Group by sha-256 of the content, keep the smallest id as the
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Group by sha-256 of ``text``, keep the smallest ``doc_id`` as the
     representative. Shuffling the 32-byte digest instead of the document
     body keeps shuffle volume O(rows × 32B) regardless of doc size."""
     return (
-        df.select(F.sha2(F.col(text_col), 256).alias("_h"), F.col(id_col))
+        df.select(F.sha2(F.col("text"), 256).alias("_h"), "doc_id")
         .groupBy("_h")
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
         .drop("_h")
     )
 

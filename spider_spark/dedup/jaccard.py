@@ -19,17 +19,17 @@ NGRAM = 3
 JACCARD_THRESHOLD = 0.1
 
 
-def shingles(text_col: Column, n: int = NGRAM) -> Column:
-    """Distinct n-word shingles of a whitespace-tokenised text column.
-    Documents shorter than n tokens yield an empty array (a bare
-    sequence(0, size-n) turns DESCENDING for short docs and slice then
+def shingles(text_col: Column) -> Column:
+    """Distinct NGRAM-word shingles of a whitespace-tokenised text column.
+    Documents shorter than NGRAM tokens yield an empty array (a bare
+    sequence(0, size-NGRAM) turns DESCENDING for short docs and slice then
     throws on start 0)."""
     toks = F.split(F.trim(text_col), r"\s+")
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
+    idx = F.sequence(F.lit(0), F.size(toks) - NGRAM)
     arr = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, NGRAM)))
     )
-    return F.when(F.size(toks) >= n, arr).otherwise(
+    return F.when(F.size(toks) >= NGRAM, arr).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -121,13 +121,12 @@ MAX_POSTING_LEN = 1024
 
 def pair_explode(
     grouped_ids: DataFrame,
-    ids_col: str = "ids",
     id_field: str | None = None,
     payload_fields: tuple[str, ...] = (),
     cap: int = MAX_POSTING_LEN,
     observation=None,
 ) -> DataFrame:
-    """(doc_id_1 < doc_id_2) pairs from per-key id lists, one row per
+    """(doc_id_1 < doc_id_2) pairs from per-key id lists (column ``ids``), one row per
     co-occurrence. One shuffle (the groupBy that built the lists) instead
     of a self-join: for a key of frequency f this emits f(f-1)/2 rows via
     a JVM-side combination explode — the same output a self-join would
@@ -149,7 +148,7 @@ def pair_explode(
     test scale). Pass a ``pyspark.sql.Observation`` to count dropped
     keys (``n_dropped_keys``) after the next action.
     """
-    ids = F.array_sort(F.col(ids_col))
+    ids = F.array_sort(F.col("ids"))
 
     def mk(x, y):
         if id_field is None:
@@ -169,7 +168,7 @@ def pair_explode(
             ),
         )
     )
-    size = F.size(F.col(ids_col))
+    size = F.size(F.col("ids"))
     if observation is not None:
         grouped_ids = grouped_ids.observe(
             observation,

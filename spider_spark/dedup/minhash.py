@@ -30,27 +30,27 @@ ROWS_PER_BAND = NUM_PERM // BANDS
 EST_THRESHOLD = 0.4
 
 
-def _perm_consts(num_perm: int):
+def _perm_consts():
     """Deterministic affine constants (odd multiplier, offset) per perm."""
     import hashlib
 
     import numpy as np
 
-    a = np.empty(num_perm, dtype=np.uint64)
-    b = np.empty(num_perm, dtype=np.uint64)
-    for i in range(num_perm):
+    a = np.empty(NUM_PERM, dtype=np.uint64)
+    b = np.empty(NUM_PERM, dtype=np.uint64)
+    for i in range(NUM_PERM):
         d = hashlib.md5(f"minhash:{i}".encode()).digest()
         a[i] = int.from_bytes(d[:8], "big") | 1  # odd → bijective mod 2^64
         b[i] = int.from_bytes(d[8:], "big")
     return a, b
 
 
-def minhash_signatures(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """(doc_id, sig: array<bigint>[num_perm]) — fully narrow, NO shuffle.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<bigint>[NUM_PERM]) — fully narrow, NO shuffle.
 
     Shingles are a per-document set, so the signature never needs an
     exchange: one Arrow-batched kernel does tokenise → shingle-hash →
-    num_perm affine-remix minima per document, all vectorised (memoised
+    NUM_PERM affine-remix minima per document, all vectorised (memoised
     crc32 token hashes, numpy uint64 shingle combine, one
     minimum.reduceat pass per permutation over the whole batch).
     Embarrassingly parallel: at 100 TB this stage scales with input
@@ -60,7 +60,7 @@ def minhash_signatures(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    a, b = _perm_consts(num_perm)
+    a, b = _perm_consts()
     C1, C2, C3 = (
         np.uint64(0x9E3779B97F4A7C15),
         np.uint64(0xC2B2AE3D27D4EB4F),
@@ -139,14 +139,13 @@ def band_postings(sig: DataFrame, bands: int = BANDS) -> DataFrame:
 
 def lsh_candidate_pairs(
     sig: DataFrame,
-    bands: int = BANDS,
     cap: int | None = MAX_BUCKET_LEN,
     observation=None,
 ) -> DataFrame:
     """Distinct candidate (doc_id_1 < doc_id_2) pairs sharing ≥1 band."""
     from spider_spark.dedup.jaccard import pair_explode
 
-    banded = band_postings(sig, bands)
+    banded = band_postings(sig)
     grouped = banded.groupBy("band", "bh").agg(F.collect_list("doc_id").alias("ids"))
     return pair_explode(grouped, cap=cap, observation=observation).distinct()
 
@@ -233,7 +232,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_verified_pairs(
     docs: DataFrame,
     threshold: float = 0.4,
-    cap: int | None = MAX_BUCKET_LEN,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """The production two-stage near-dup pipeline: LSH candidate pairs,
@@ -257,7 +255,7 @@ def minhash_verified_pairs(
     if candidates is None:
         sig = minhash_signatures(docs).cache()
         sig.count()
-        candidates = lsh_candidate_pairs(sig, cap=cap)
+        candidates = lsh_candidate_pairs(sig)
     cand = candidates.select("doc_id_1", "doc_id_2")
     sh = shingle_hash_table(docs)
     s1 = sh.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1"))

@@ -40,11 +40,9 @@ from spider_spark.similarity.ivf import N_LISTS, _assign_df, train_centroids
 SEM_THRESHOLD = 0.35
 
 
-def semantic_removals(
-    emb: DataFrame, n_lists: int = N_LISTS, threshold: float = SEM_THRESHOLD
-) -> DataFrame:
+def semantic_removals(emb: DataFrame, n_lists: int = N_LISTS) -> DataFrame:
     """(vec_id, list_id, removed) for every vector: removed iff an
-    earlier same-cluster vector has cosine ≥ threshold."""
+    earlier same-cluster vector has cosine ≥ SEM_THRESHOLD."""
     cents = train_centroids(emb, n_lists)
     assigned = (
         with_normed(emb)
@@ -63,7 +61,7 @@ def semantic_removals(
     removed = (
         a.join(b, "list_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(cos, 6) >= threshold)
+        .filter(F.round(cos, 6) >= SEM_THRESHOLD)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("removed", F.lit(True))

@@ -61,10 +61,10 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_pairs(docs: DataFrame, hamming_max: int = HAMMING_MAX) -> DataFrame:
-    """Pairs within Hamming distance ≤ hamming_max via chunk-bucketed
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Pairs within Hamming distance ≤ HAMMING_MAX via chunk-bucketed
     candidate join + exact popcount verify."""
-    return hamming_pairs(simhash_fingerprints(docs), hamming_max)
+    return hamming_pairs(simhash_fingerprints(docs))
 
 
 def hamming_pairs(

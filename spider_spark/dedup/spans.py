@@ -89,9 +89,7 @@ def non_canonical_positions(docs: DataFrame, k: int = K) -> DataFrame:
     )
 
 
-def substring_dedup_clean(
-    spark: SparkSession, sf_dir: str, k: int = K
-) -> DataFrame:
+def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source profile of the keep-first substring-dedup transform:
     (source, n_docs, removed_tokens, total_tokens, kept_share). Every
     token covered by a NON-FIRST occurrence of a duplicated k-gram is
@@ -104,7 +102,7 @@ def substring_dedup_clean(
         "doc_id", "source", F.size(toks).cast("long").alias("n_tok")
     )
     per_doc = (
-        merge_spans(non_canonical_positions(docs, k), k)
+        merge_spans(non_canonical_positions(docs, K), K)
         .groupBy("doc_id")
         .agg(
             F.sum(F.col("span_end") - F.col("span_start") + 1)
@@ -161,7 +159,7 @@ def merge_spans(hits: DataFrame, k: int = K) -> DataFrame:
     )
 
 
-def duplicate_spans(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
+def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source duplicated-substring profile: (source, n_docs,
     n_dup_docs, n_spans, dup_tokens, total_tokens, dup_share)."""
     docs = Catalog(spark, sf_dir).documents.filter(F.col("text").isNotNull())
@@ -170,7 +168,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
         "doc_id", "source", F.size(toks).cast("long").alias("n_tok")
     )
     per_doc = (
-        merge_spans(duplicated_positions(docs, k), k)
+        merge_spans(duplicated_positions(docs, K), K)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_spans"),

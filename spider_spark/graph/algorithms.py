@@ -14,13 +14,19 @@ rounds to truncate the growing lineage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
 from spider_spark.dedup.jaccard import ngram_jaccard_pairs
 
 MAX_ITERS = 20
+# Fixed-iteration constants, shared with the DuckDB mirrors in
+# __spark_entry__ (_pagerank_sql/_trustrank_sql/_hits_sql/_lpa_sql).
+DAMPING = 0.85
+PAGERANK_ITERS = 10
+HITS_ITERS = 8
+LPA_ITERS = 5
 
 # Edge count below which the component computation runs driver-side:
 # iterative min-label rounds cost ~0.5 s of scheduling latency EACH at
@@ -61,8 +67,6 @@ def _union_find_components(rows) -> list[tuple[int, int]]:
 
 def connected_components(
     edges: DataFrame,
-    max_iters: int = MAX_ITERS,
-    checkpoint: bool = True,
     small_graph_edges: int | None = SMALL_CC_EDGES,
 ) -> DataFrame:
     """(node, component) where component = min node id reachable.
@@ -99,16 +103,11 @@ def connected_components(
     # so Σcomponent strictly decreases until the fixed point — one cheap
     # aggregate on checkpointed data replaces an old-vs-new diff join.
     # (decimal sum: Σ of int64 ids overflows long under ANSI at scale)
-    def _label_sum(lbl: DataFrame):
-        return lbl.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).first().s
-
     def _sum_metric():
         return F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
 
-    prev_sum = _label_sum(labels)
-    for it in range(max_iters):
+    prev_sum = labels.agg(_sum_metric()).first().s
+    for _ in range(MAX_ITERS):
         # each node takes min over {own label} ∪ {neighbours' labels}:
         # ONE join + ONE aggregate per round (the union rides into the
         # same shuffle), instead of join+agg+left-outer
@@ -134,23 +133,17 @@ def connected_components(
                 F.coalesce(F.col("c_comp"), F.col("component")).alias("component"),
             )
         )
-        # localCheckpoint by default: measured FASTER than cache() here
-        # (interleaved A/B min 3.5s vs 4.5s at sf0.1) — the lineage-free
-        # plan beats saving the one extra materialisation job, because
-        # each round's optimizer/codegen cost grows with the dragged-in
-        # parent plan under cache(). The convergence sum rides the SAME
-        # job as an observed metric (eager localCheckpoint flows every
-        # row through the observe node), saving one aggregate job per
-        # round — the loop is driver-latency-bound at small scale.
-        if checkpoint:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            labels = labels.observe(obs, _sum_metric()).localCheckpoint()
-            cur_sum = obs.get["s"]
-        else:
-            labels = labels.cache()
-            cur_sum = _label_sum(labels)
+        # localCheckpoint: measured FASTER than cache() here (interleaved
+        # A/B min 3.5s vs 4.5s at sf0.1) — the lineage-free plan beats
+        # saving the one extra materialisation job, because each round's
+        # optimizer/codegen cost grows with the dragged-in parent plan
+        # under cache(). The convergence sum rides the SAME job as an
+        # observed metric (eager localCheckpoint flows every row through
+        # the observe node), saving one aggregate job per round — the
+        # loop is driver-latency-bound at small scale.
+        obs = Observation()
+        labels = labels.observe(obs, _sum_metric()).localCheckpoint()
+        cur_sum = obs.get["s"]
         prev_labels.unpersist()
         if cur_sum == prev_sum:
             break
@@ -171,11 +164,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iters: int = 10,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
     """Classic iterative PageRank over a (src, dst) edge DataFrame.
 
     Fixed iteration count (deterministic output shape); each round is
@@ -191,7 +180,7 @@ def pagerank(
     n_nodes = nodes.count()
     out_deg = edges.groupBy("src").agg(F.count("*").alias("deg")).cache()
     ranks = nodes.withColumn("rank", F.lit(1.0))
-    for it in range(iters):
+    for _ in range(iters):
         contribs = (
             edges.join(ranks, edges.src == ranks.node)
             .join(F.broadcast(out_deg), "src")
@@ -210,8 +199,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
+                    F.lit(1.0 - DAMPING)
+                    + F.lit(DAMPING)
                     * (F.coalesce(F.col("in_mass"), F.lit(0.0)) + F.col("d") / n_nodes)
                 ).alias("rank"),
             )
@@ -223,8 +212,7 @@ def pagerank(
 def trustrank(
     edges: DataFrame,
     seeds: list,
-    damping: float = 0.85,
-    iters: int = 10,
+    iters: int = PAGERANK_ITERS,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004):
     personalized PageRank whose teleport distribution is uniform over a
@@ -272,8 +260,8 @@ def trustrank(
                 "node",
                 "tele",
                 (
-                    F.lit(1.0 - damping) * F.col("tele")
-                    + F.lit(damping)
+                    F.lit(1.0 - DAMPING) * F.col("tele")
+                    + F.lit(DAMPING)
                     * (
                         F.coalesce(F.col("in_mass"), F.lit(0.0))
                         + F.col("d") * F.col("tele")
@@ -359,7 +347,7 @@ def materialized_clusters(
     )
 
 
-def hits(edges: DataFrame, iters: int = 8) -> DataFrame:
+def hits(edges: DataFrame) -> DataFrame:
     """HITS hubs & authorities over a (src, dst) edge DataFrame
     (Kleinberg's algorithm): authority ← Σ hub(in-neighbours),
     hub ← Σ auth(out-neighbours).
@@ -380,7 +368,7 @@ def hits(edges: DataFrame, iters: int = 8) -> DataFrame:
     scores = nodes.select(
         "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
     ).localCheckpoint()
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         auth = (
             edges.join(scores, edges.src == scores.node)
             .groupBy("dst")
@@ -432,7 +420,6 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def label_propagation(
     edges: DataFrame,
-    iters: int = 5,
     small_graph_edges: int | None = SMALL_CC_EDGES,
 ) -> DataFrame:
     """Community detection by synchronous label propagation: each round
@@ -461,7 +448,7 @@ def label_propagation(
         for r in bidir.collect():
             adj.setdefault(r.src, []).append(r.dst)
         lab = {v: v for v in adj}
-        for _ in range(iters):
+        for _ in range(LPA_ITERS):
             new = {}
             for v, nbrs in adj.items():
                 counts: dict[int, int] = {}
@@ -481,7 +468,7 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         votes = (
             bidir.join(labels, bidir.dst == labels.node)
             .groupBy("src", "label")

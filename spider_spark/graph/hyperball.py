@@ -95,7 +95,7 @@ def _estimate(regs: DataFrame) -> DataFrame:
 SMALL_BALL_EDGES = 50_000
 
 
-def _twin_estimates(edge_list, max_rounds: int):
+def _twin_estimates(edge_list):
     """Driver-side EXACT replica of _ball_rounds + _estimate for small
     graphs: same md5 register formulas, same max-merge, same convergence
     probe (register mass + present-count unchanged), same estimator.
@@ -135,7 +135,7 @@ def _twin_estimates(edge_list, max_rounds: int):
 
     yield 0, {n: estimate(regs[n]) for n in nodes}
     prev_probe = None
-    for r in range(1, max_rounds + 1):
+    for r in range(1, MAX_ROUNDS + 1):
         new = {}
         for n in nodes:
             merged = dict(regs[n])
@@ -157,7 +157,6 @@ def _twin_estimates(edge_list, max_rounds: int):
 
 def hyperball_harmonic(
     edges: DataFrame,
-    max_rounds: int = MAX_ROUNDS,
     small_graph_edges: int | None = SMALL_BALL_EDGES,
 ) -> DataFrame:
     """(node, harmonic, reach_est) over directed edges (src, dst):
@@ -175,7 +174,7 @@ def hyperball_harmonic(
             edge_list = [(r.src, r.dst) for r in e.collect()]
             h: dict = {}
             prev: dict = {}
-            for r, est in _twin_estimates(edge_list, max_rounds):
+            for r, est in _twin_estimates(edge_list):
                 if r == 0:
                     h = {n: 0.0 for n in est}
                 else:
@@ -198,7 +197,7 @@ def hyperball_harmonic(
                 F.round("prev", 2).alias("reach_est"),
             )
     harmonic = None
-    for r, regs in _ball_rounds(edges, max_rounds):
+    for r, regs in _ball_rounds(edges):
         if r == 0:
             harmonic = _estimate(regs).select(
                 "node", F.lit(0.0).alias("h"), F.col("est").alias("prev")
@@ -225,7 +224,7 @@ def hyperball_harmonic(
     )
 
 
-def _ball_rounds(edges: DataFrame, max_rounds: int):
+def _ball_rounds(edges: DataFrame):
     """Yield (r, regs) for r = 0 (singleton sketches) then each merge
     round until the register relation stops changing. The merge runs
     along REVERSED edges so round-r sketches estimate the in-ball
@@ -242,7 +241,7 @@ def _ball_rounds(edges: DataFrame, max_rounds: int):
     regs = _init_registers(nodes).localCheckpoint()
     yield 0, regs
     prev_probe = None
-    for r in range(1, max_rounds + 1):
+    for r in range(1, MAX_ROUNDS + 1):
         nbr_regs = rev.join(
             regs.withColumnRenamed("node", "nbr"), "nbr"
         ).select("node", "reg_idx", "reg_val")
@@ -288,10 +287,10 @@ def host_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round to 2/4 dp (twin == distributed asserted in tests).
         # bounded: n_edges <= SMALL_BALL_EDGES by the gate above
         edge_list = [(r.src, r.dst) for r in edges.collect()]
-        for r, est in _twin_estimates(edge_list, MAX_ROUNDS):
+        for r, est in _twin_estimates(edge_list):
             totals.append((r, sum(est[n] for n in sorted(est))))
     else:
-        for r, regs in _ball_rounds(edges, MAX_ROUNDS):
+        for r, regs in _ball_rounds(edges):
             n_r = _estimate(regs).agg(F.sum("est")).first()[0]
             totals.append((r, float(n_r)))
     final = totals[-1][1]

@@ -70,13 +70,13 @@ def decode_bmp(data: bytes) -> np.ndarray:
 WAV_RATE = 8000
 
 
-def encode_wav(samples: np.ndarray, rate: int = WAV_RATE) -> bytes:
+def encode_wav(samples: np.ndarray) -> bytes:
     """int16 mono samples -> RIFF WAVE PCM-16 bytes."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(rate)
+        w.setframerate(WAV_RATE)
         w.writeframes(samples.astype("<i2").tobytes())
     return buf.getvalue()
 
@@ -146,12 +146,12 @@ def synth_image(asset: int, variant: int = 0) -> np.ndarray:
     return img
 
 
-def synth_audio(asset: int, variant: int = 0, rate: int = WAV_RATE) -> np.ndarray:
+def synth_audio(asset: int, variant: int = 0) -> np.ndarray:
     """Deterministic test waveform: two hash-derived tones + a variant
     amplitude tweak. int16 mono, WAV_SECONDS long."""
     p = _seed_floats(f"aud:{asset}", 4)
-    n = int(rate * WAV_SECONDS)
-    t = np.arange(n) / rate
+    n = int(WAV_RATE * WAV_SECONDS)
+    t = np.arange(n) / WAV_RATE
     f1, f2 = 200 + p[0] * 800, 1000 + p[1] * 2000
     sig = 0.6 * np.sin(2 * np.pi * f1 * t + p[2] * 6.28) + 0.3 * np.sin(
         2 * np.pi * f2 * t + p[3] * 6.28

@@ -42,12 +42,12 @@ _DCT = np.cos(
 )
 
 
-def _block_mean_resize(gray: np.ndarray, size: int = RASTER) -> np.ndarray:
-    """(H, W) float -> (size, size) by block means (reduceat over the
+def _block_mean_resize(gray: np.ndarray) -> np.ndarray:
+    """(H, W) float -> (RASTER, RASTER) by block means (reduceat over the
     floor-spaced bin edges both axes) — the standard pHash downsample."""
     h, w = gray.shape
-    ys = (np.arange(size) * h) // size
-    xs = (np.arange(size) * w) // size
+    ys = (np.arange(RASTER) * h) // RASTER
+    xs = (np.arange(RASTER) * w) // RASTER
     r = np.add.reduceat(gray, ys, axis=0) / np.diff(np.append(ys, h))[:, None]
     c = np.add.reduceat(r, xs, axis=1) / np.diff(np.append(xs, w))[None, :]
     return c

@@ -95,7 +95,7 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def length_buckets(spark: SparkSession, sf_dir: str, n_buckets: int = 10) -> DataFrame:
+def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile buckets of document length (ntile over n_chars, doc_id
     tiebreak) with per-bucket inventory — the length-balanced sharding a
     tokenizer pipeline uses. The decile assignment is a two-phase exact
@@ -109,7 +109,7 @@ def length_buckets(spark: SparkSession, sf_dir: str, n_buckets: int = 10) -> Dat
         with_global_ntile(
             docs.select("doc_id", "n_chars"),
             [F.asc("n_chars"), F.asc("doc_id")],
-            n_buckets,
+            10,
             out="bucket",
         )
         .groupBy("bucket")

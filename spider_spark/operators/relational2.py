@@ -15,6 +15,14 @@ from spider_spark.catalog import Catalog
 _R2 = lambda c: F.round(c, 2)  # noqa: E731
 
 
+def _exact_sum2(per_row):
+    """round(Σ per_row, 2) as a double, summed as DECIMAL(18,4) — the q9
+    pattern: an exact decimal sum does not depend on partition order
+    (a double sum moves its last ulp with it), and half-up rounding of
+    an exact decimal agrees in every engine."""
+    return F.round(F.sum(per_row.cast("decimal(18,4)")), 2).cast("double")
+
+
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7: shipping volume between two nations by year (either
     direction), via supplier-nation × customer-nation join."""
@@ -40,7 +48,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
         .filter(pair_ok)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year"))
-        .agg(_R2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("volume"))
+        .agg(_exact_sum2(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"))
     )
 
 
@@ -76,21 +84,17 @@ def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     retailprice × qty, by supplier nation and year, parts LIKE filter."""
     cat = Catalog(spark, sf_dir)
     part = cat.part.filter(F.col("p_name").like("%widget%"))
-    # per-row profit cast to DECIMAL(18,4) BEFORE the sum: the double
-    # product is bit-identical across engines, the decimal sum is exact
-    # and order-independent (a double sum differs in the last ulp by
-    # partition order and landed exactly on a .xx5 round boundary at
-    # sf0.001), and round-half-up on an exact decimal agrees everywhere
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - 0.6 * F.col("p_retailprice") * F.col("l_quantity")
-    ).cast("decimal(18,4)")
+    # the double per-row product is bit-identical across engines; a
+    # double sum of it landed exactly on a .xx5 boundary at sf0.001
+    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 0.6 * F.col(
+        "p_retailprice"
+    ) * F.col("l_quantity")
     return (
         cat.lineitem.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(cat.supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(cat.nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("l_shipdate").cast("long").alias("o_year"))
-        .agg(F.round(F.sum(profit), 2).cast("double").alias("sum_profit"))
+        .agg(_exact_sum2(profit).alias("sum_profit"))
     )
 
 
@@ -135,7 +139,11 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rev = (
         li.groupBy("l_suppkey")
-        .agg(_R2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("total_revenue"))
+        .agg(
+            _exact_sum2(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "total_revenue"
+            )
+        )
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
@@ -158,7 +166,14 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(avgs.withColumnRenamed("l_partkey", "ap_key")),
                 F.col("l_partkey") == F.col("ap_key"))
         .filter(F.col("l_quantity") < F.col("half_avg"))
-        .agg(_R2(F.sum("l_extendedprice") / 7.0).alias("avg_yearly"))
+        # exact decimal sum, then one IEEE divide + round (per-row, same
+        # in both engines)
+        .agg(
+            _R2(
+                F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double")
+                / 7.0
+            ).alias("avg_yearly")
+        )
     )
 
 
@@ -177,7 +192,8 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dormant = rich.join(recent, rich.c_custkey == recent.o_custkey, "left_anti")
     return dormant.groupBy("c_nationkey").agg(
-        F.count("*").alias("numcust"), _R2(F.sum("c_acctbal")).alias("totacctbal")
+        F.count("*").alias("numcust"),
+        _exact_sum2(F.col("c_acctbal")).alias("totacctbal"),
     )
 
 

@@ -243,14 +243,14 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 HIST_BINS = 64
 
 
-def fixed_histogram(df: DataFrame, col: str, lo, hi, n_bins: int = HIST_BINS) -> DataFrame:
-    """Fixed-width counting histogram as an O(n_bins) relation — the
+def fixed_histogram(df: DataFrame, col: str, lo, hi) -> DataFrame:
+    """Fixed-width counting histogram as an O(HIST_BINS) relation — the
     MERGEABLE quantile sketch (cells sum across shards/micro-batches,
     exactly like the Count-Min cells; equi-depth boundaries don't
     merge, fixed-width cells do). One groupBy with map-side combine."""
-    width = (hi - lo) / float(n_bins)
+    width = (hi - lo) / float(HIST_BINS)
     b = F.least(
-        F.lit(n_bins - 1),
+        F.lit(HIST_BINS - 1),
         F.greatest(F.lit(0), F.floor((F.col(col) - lo) / width).cast("int")),
     ).cast("long")
     return df.select(b.alias("bin")).groupBy("bin").agg(

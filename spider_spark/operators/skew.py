@@ -13,15 +13,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+N_SALTS = 16
+
 
 def salted_agg(
     df: DataFrame,
     keys: list[str],
     aggs: dict[str, Column],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation: phase 1 groups on (keys, random-ish salt)
-    so a hot key spreads over n_salts reducers; phase 2 merges the
+    so a hot key spreads over N_SALTS reducers; phase 2 merges the
     partials. Only algebraic aggregates (sum/count/min/max) are valid —
     the caller passes phase-1 exprs and this recombines by summing sums,
     summing counts, min-of-mins, max-of-maxes.
@@ -30,7 +31,7 @@ def salted_agg(
     function is chosen from the expression's first token (sum/count →
     sum, min → min, max → max).
     """
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id()), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id()), F.lit(N_SALTS))
     phase1 = (
         df.withColumn("_salt", salt)
         .groupBy(*keys, "_salt")
@@ -52,21 +53,19 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-resistant equi-join: the big side gets a random-ish salt in
-    [0, n_salts); the small side is exploded ×n_salts so every
+    [0, N_SALTS); the small side is exploded ×N_SALTS so every
     (key, salt) combination exists. A hot key's rows then spread over
-    n_salts reducers instead of one."""
+    N_SALTS reducers instead of one."""
     big_s = big.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(F.col(key), F.monotonically_increasing_id()), F.lit(n_salts)),
+        F.pmod(F.xxhash64(F.col(key), F.monotonically_increasing_id()), F.lit(N_SALTS)),
     )
     small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1)))
     )
-    return big_s.join(small_s, [key, "_salt"], how).drop("_salt")
+    return big_s.join(small_s, [key, "_salt"]).drop("_salt")
 
 
 def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

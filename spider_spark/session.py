@@ -70,7 +70,7 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def ensure_parallelism(df, bytes_per_task: int = 64 << 10, target: int | None = None):
+def ensure_parallelism(df, bytes_per_task: int = 64 << 10):
     """Fan a DataFrame out before an expensive narrow (Arrow-kernel)
     stage, sized so each task gets at least ``bytes_per_task`` of input.
 
@@ -91,8 +91,7 @@ def ensure_parallelism(df, bytes_per_task: int = 64 << 10, target: int | None = 
         # unstarted stream, and a repartition would add a per-batch
         # shuffle the stateless kernels don't need
         return df
-    sc = df.sparkSession.sparkContext
-    cores = target if target is not None else sc.defaultParallelism
+    cores = df.sparkSession.sparkContext.defaultParallelism
     want = cores
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

@@ -37,13 +37,11 @@ from spider_spark.similarity import pq as _pq
 
 # ---------------------------------------------------------------- IVF
 
-def save_ivf_index(
-    candidates: DataFrame, path: str, n_lists: int = _ivf.N_LISTS
-) -> None:
+def save_ivf_index(candidates: DataFrame, path: str) -> None:
     """Train the coarse quantizer once and persist centroids + the
     list_id-partitioned inverted lists."""
     spark = candidates.sparkSession
-    cents = _ivf.train_centroids(candidates, n_lists)
+    cents = _ivf.train_centroids(candidates)
     rows = [(i, [float(x) for x in cents[i]]) for i in range(len(cents))]
     (
         spark.createDataFrame(rows, "list_id bigint, centroid array<double>")
@@ -74,13 +72,11 @@ def load_ivf_index(spark: SparkSession, path: str) -> tuple[np.ndarray, DataFram
 def ann_ivf_topk_prebuilt(
     queries: DataFrame,
     index_path: str,
-    k: int = _ivf.TOP_K,
-    n_probe: int = _ivf.N_PROBE,
 ) -> DataFrame:
     """Query-only IVF search against a saved index: no training, no
     corpus encode — just the probe join against the stored lists."""
     cents, lists = load_ivf_index(queries.sparkSession, index_path)
-    return _ivf.probe_search(queries, cents, lists, k, n_probe)
+    return _ivf.probe_search(queries, cents, lists)
 
 
 # ----------------------------------------------------------------- PQ
@@ -88,12 +84,10 @@ def ann_ivf_topk_prebuilt(
 def save_pq_index(
     candidates: DataFrame,
     path: str,
-    m_sub: int = _pq.M_SUB,
-    k_codes: int = _pq.K_CODES,
 ) -> None:
     """Train codebooks once, encode the corpus once, persist both."""
     spark = candidates.sparkSession
-    books = _pq.train_codebooks(candidates, m_sub, k_codes)
+    books = _pq.train_codebooks(candidates)
     rows = [
         (m, c, [float(x) for x in books[m, c]])
         for m in range(books.shape[0])
@@ -127,14 +121,12 @@ def ann_pq_topk_prebuilt(
     queries: DataFrame,
     candidates: DataFrame,
     index_path: str,
-    k: int = _pq.TOP_K,
-    shortlist: int = _pq.SHORTLIST,
 ) -> DataFrame:
     """Query-only PQ search against saved codebooks + codes. The float
     ``candidates`` table is only touched for the tiny exact re-rank of
     the shortlist (queries x shortlist rows)."""
     books, codes = load_pq_index(queries.sparkSession, index_path)
-    return _pq.adc_search(queries, candidates, books, codes, k, shortlist)
+    return _pq.adc_search(queries, candidates, books, codes)
 
 
 def _index_base(sf_dir: str) -> str:

@@ -37,11 +37,11 @@ TOP_K = 5
 N_QUERIES = 10
 
 
-def _collect_matrix(df: DataFrame, id_col: str = "vec_id") -> tuple[np.ndarray, np.ndarray]:
+def _collect_matrix(df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     # bounded: callers pass a modulo-capped training sample or the small
     # query set, never the full corpus
-    pdf = df.select(id_col, "embedding").toPandas()
-    ids = pdf[id_col].to_numpy()
+    pdf = df.select("vec_id", "embedding").toPandas()
+    ids = pdf["vec_id"].to_numpy()
     mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
     return ids, mat
 
@@ -85,21 +85,19 @@ def _assign_df(df: DataFrame, cents: np.ndarray, n_probe: int = 1) -> DataFrame:
 def train_centroids(
     emb: DataFrame,
     n_lists: int = N_LISTS,
-    iters: int = LLOYD_ITERS,
-    sample_target: int = 20_000,
 ) -> np.ndarray:
     """Deterministic coarse quantizer trained on a bounded sample.
 
     Standard IVF practice (FAISS trains the quantizer on ~max(256, 39·C)
     points per list): a deterministic ``vec_id % m`` sample — sized so at
-    most ~sample_target vectors reach the driver regardless of corpus
+    most ~20k vectors reach the driver regardless of corpus
     size — then numpy Lloyd iterations locally. Only the assignment
     passes over the full corpus are distributed, and those are narrow
     map-only stages.
     """
     emb = emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
     n = emb.count()
-    m = max(1, n // sample_target)
+    m = max(1, n // 20_000)
     _, mat = _collect_matrix(emb.filter(F.col("vec_id") % m == 0))
     norms = np.sqrt((mat * mat).sum(axis=1))
     norms[norms == 0] = 1.0
@@ -107,7 +105,7 @@ def train_centroids(
     # hash-partition init, then spherical Lloyd
     assign = np.arange(len(mat)) % n_lists
     cents = np.zeros((n_lists, mat.shape[1]))
-    for _ in range(iters + 1):
+    for _ in range(LLOYD_ITERS + 1):
         for lid in range(n_lists):
             members = unit[assign == lid]
             if len(members):  # empty lists keep their previous centroid

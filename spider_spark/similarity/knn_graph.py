@@ -70,27 +70,25 @@ def _top_m(scored: DataFrame, m: int) -> DataFrame:
 
 def knn_graph_build(
     emb: DataFrame,
-    m: int = M_NEIGHBORS,
-    rounds: int = NN_DESCENT_ROUNDS,
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(src, dst, cos) — each node's best-found m neighbors by cosine.
+    """(src, dst, cos) — each node's best-found M_NEIGHBORS neighbors by cosine.
 
     Seeds = LSH-bucket co-members (locality) ∪ hash-ordered ring
     (degree floor); each NN-Descent round proposes neighbors-of-
-    neighbors over the SYMMETRIZED current graph and re-prunes to m.
+    neighbors over the SYMMETRIZED current graph and re-prunes to
+    M_NEIGHBORS.
     """
     from spider_spark.similarity.lsh import bucket_id
 
-    vecs = with_normed(emb, vec_col).select(
+    vecs = with_normed(emb).select(
         F.col("vec_id").alias("id"), F.col("_v").alias("v"), F.col("_norm").alias("n")
     )
-    vecs = vecs.localCheckpoint()  # scored() reads it 1 + rounds times
+    vecs = vecs.localCheckpoint()  # scored() reads it 1 + NN_DESCENT_ROUNDS times
 
     # --- seed edges -------------------------------------------------
     from spider_spark.dedup.jaccard import pair_explode
 
-    bucketed = emb.select(F.col("vec_id").alias("id"), bucket_id(F.col(vec_col)).alias("b"))
+    bucketed = emb.select(F.col("vec_id").alias("id"), bucket_id(F.col("embedding")).alias("b"))
     lsh_pairs = pair_explode(
         bucketed.groupBy("b").agg(F.collect_list("id").alias("ids"))
     ).select(F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst"))
@@ -110,7 +108,7 @@ def knn_graph_build(
             [], "src bigint, dst bigint, cos double, is_ring boolean"
         )
     ring_edges = None
-    for j in range(1, m // 2 + 1):
+    for j in range(1, M_NEIGHBORS // 2 + 1):
         e = pos.select(
             F.col("id").alias("src"), ((F.col("pos") - 1 + j) % total).alias("tp")
         ).join(
@@ -121,11 +119,11 @@ def knn_graph_build(
     edges = lsh_pairs.unionByName(ring_edges)
     sym = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     cur = _top_m(
-        _scored(sym.filter(F.col("src") != F.col("dst")).distinct(), vecs), m
+        _scored(sym.filter(F.col("src") != F.col("dst")).distinct(), vecs), M_NEIGHBORS
     ).localCheckpoint()
 
     # --- NN-Descent rounds ------------------------------------------
-    for _ in range(rounds):
+    for _ in range(NN_DESCENT_ROUNDS):
         symg = cur.select("src", "dst").unionByName(
             cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
@@ -138,9 +136,7 @@ def knn_graph_build(
         )
         # subtract already-scored edges, score only the new ones
         new = proposals.join(cur.select("src", "dst"), ["src", "dst"], "left_anti")
-        cur = _top_m(
-            cur.unionByName(_scored(new, vecs)), m
-        ).localCheckpoint()
+        cur = _top_m(cur.unionByName(_scored(new, vecs)), M_NEIGHBORS).localCheckpoint()
     # Keep the ring edges PERMANENTLY alongside the pruned k-NN edges:
     # on clusterable data the top-m prune leaves one disconnected clique
     # per cluster (every same-cluster neighbor beats every cross-cluster
@@ -202,9 +198,6 @@ def _search_twin(
     graph: DataFrame,
     candidates: DataFrame,
     k: int,
-    beam: int,
-    hops: int,
-    vec_col: str,
 ) -> DataFrame:
     """Exact replica of the distributed beam search, run on the driver.
 
@@ -239,10 +232,10 @@ def _search_twin(
 
     # bounded: gated by small_twin_nodes in knn_graph_search
     crows = candidates.select(
-        "vec_id", vec_col, F.xxhash64("vec_id").alias("h")
+        "vec_id", "embedding", F.xxhash64("vec_id").alias("h")
     ).collect()
     # bounded: query batches are small by contract (the search input)
-    qrows = queries.select("vec_id", vec_col).collect()
+    qrows = queries.select("vec_id", "embedding").collect()
     # bounded: adjacency of the gated candidate set (<= nodes * (m + ring))
     arows = graph.select("src", "dst").collect()
 
@@ -276,9 +269,9 @@ def _search_twin(
 
         pool: dict[int, float] = {n: score(n) for n in seeds if n in cv}
         expanded: set[int] = set()
-        for _ in range(hops):
+        for _ in range(HOPS):
             unexp = [n for n in pool if n not in expanded]
-            beam_nodes = sorted(unexp, key=lambda n: (-pool[n], n))[:beam]
+            beam_nodes = sorted(unexp, key=lambda n: (-pool[n], n))[:BEAM]
             new = {
                 nbr
                 for n in beam_nodes
@@ -302,14 +295,11 @@ def knn_graph_search(
     graph: DataFrame,
     candidates: DataFrame,
     k: int = TOP_K,
-    beam: int = BEAM,
-    hops: int = HOPS,
-    vec_col: str = "embedding",
     small_twin_nodes: int | None = SMALL_SEARCH_NODES,
 ) -> DataFrame:
     """(q_id, neighbor_id, cos, rank) — best-first beam search over the
     stored adjacency. All query beams advance together: each hop picks
-    every query's best ``beam`` not-yet-expanded pool nodes, expands
+    every query's best BEAM not-yet-expanded pool nodes, expands
     them with ONE adjacency join, scores the unseen neighbors, and
     feeds them back into the pool; the final top-k ranks everything
     visited. Entry points are the N_ENTRY global hash-ranked nodes
@@ -324,12 +314,12 @@ def knn_graph_search(
     from spider_spark.similarity.lsh import bucket_id
 
     if small_twin_nodes is not None and candidates.count() <= small_twin_nodes:
-        return _search_twin(queries, graph, candidates, k, beam, hops, vec_col)
+        return _search_twin(queries, graph, candidates, k)
 
-    cvecs = with_normed(candidates, vec_col).select(
+    cvecs = with_normed(candidates).select(
         F.col("vec_id").alias("node"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
     ).localCheckpoint()
-    q = with_normed(queries, vec_col).select(
+    q = with_normed(queries).select(
         F.col("vec_id").alias("q_id"), F.col("_v").alias("qv"), F.col("_norm").alias("qn")
     )
 
@@ -338,10 +328,10 @@ def knn_graph_search(
         cvecs.select("node").orderBy(F.xxhash64("node"), F.col("node")).limit(N_ENTRY)
     )
     qb = queries.select(
-        F.col("vec_id").alias("q_id"), bucket_id(F.col(vec_col)).alias("b")
+        F.col("vec_id").alias("q_id"), bucket_id(F.col("embedding")).alias("b")
     )
     cb = candidates.select(
-        F.col("vec_id").alias("node"), bucket_id(F.col(vec_col)).alias("b")
+        F.col("vec_id").alias("node"), bucket_id(F.col("embedding")).alias("b")
     )
     wb = Window.partitionBy("q_id").orderBy(F.xxhash64("node"), F.col("node"))
     bucket_entries = (
@@ -369,11 +359,11 @@ def knn_graph_search(
     pool = score(seeds).withColumn("expanded", F.lit(False)).localCheckpoint()
     adj = graph.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("node"))
-    for _ in range(hops):
+    for _ in range(HOPS):
         unexp = pool.filter(~F.col("expanded"))
         beam_df = (
             unexp.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= beam)
+            .filter(F.col("_r") <= BEAM)
             .select("q_id", "node")
         )
         new_nodes = (
@@ -411,15 +401,13 @@ def add_to_knn_graph(
     new_vectors: DataFrame,
     graph: DataFrame,
     corpus: DataFrame,
-    m: int = M_NEIGHBORS,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Insert vectors into an existing graph WITHOUT a full rebuild (the
     HNSW add() contract, mirroring similarity.index_store.add_to_ivf_index):
     beam-search each new vector against the stored adjacency to find its
-    ~m nearest corpus nodes, connect it forward to them, and give each
-    found node the reverse edge, re-pruned to its top-m — so insertion
-    cost is one search batch + one keyed window, independent of corpus
+    ~M_NEIGHBORS nearest corpus nodes, connect it forward to them, and
+    give each found node the reverse edge, re-pruned to its top
+    M_NEIGHBORS — so insertion cost is one search batch + one keyed window, independent of corpus
     size. Returns the updated (src, dst, cos, is_ring) adjacency.
 
     Scope of the re-prune: ONLY nodes that actually received a reverse
@@ -431,16 +419,15 @@ def add_to_knn_graph(
     the merged adjacency never ranks mixed-precision values. Like IVF
     add, quality drifts as the corpus grows (new↔new edges only form
     through later adds' searches); rebuild when recall degrades."""
-    found = knn_graph_search(new_vectors, graph, corpus, k=m)
+    found = knn_graph_search(new_vectors, graph, corpus, k=M_NEIGHBORS)
     if "is_ring" not in graph.columns:  # pre-v2 stored adjacency
         graph = graph.withColumn("is_ring", F.lit(False))
     # re-score the found pairs at storage precision (search rounds to 4
     # dp for its output contract; the stored relation carries 6 dp)
     vecs = with_normed(
-        corpus.select("vec_id", vec_col).unionByName(
-            new_vectors.select("vec_id", vec_col)
-        ),
-        vec_col,
+        corpus.select("vec_id", "embedding").unionByName(
+            new_vectors.select("vec_id", "embedding")
+        )
     ).select(
         F.col("vec_id").alias("id"), F.col("_v").alias("v"), F.col("_norm").alias("n")
     )
@@ -457,7 +444,7 @@ def add_to_knn_graph(
     repruned = _top_m(
         graph.filter(~F.col("is_ring")).join(touched, "src", "left_semi")
         .unionByName(rev),
-        m,
+        M_NEIGHBORS,
     )
     return untouched.unionByName(touched_ring).unionByName(repruned).unionByName(fwd)
 

@@ -29,12 +29,12 @@ TOP_K = 5
 N_QUERIES = 10
 
 
-def _plane_weights(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]]:
+def _plane_weights() -> list[list[float]]:
     """Deterministic hyperplanes: md5("plane:j:d") → uniform [-1, 1)."""
     planes = []
-    for j in range(n_planes):
+    for j in range(N_PLANES):
         row = []
-        for d in range(dim):
+        for d in range(DIM):
             h = int.from_bytes(
                 hashlib.md5(f"plane:{j}:{d}".encode()).digest()[:8], "big"
             )
@@ -46,10 +46,10 @@ def _plane_weights(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]
 PLANES = _plane_weights()
 
 
-def bucket_id(vec: Column, planes: list[list[float]] = PLANES) -> Column:
+def bucket_id(vec: Column) -> Column:
     """Sign-bit bucket of a float vector under the fixed hyperplanes."""
     bucket = F.lit(0)
-    for j, row in enumerate(planes):
+    for j, row in enumerate(PLANES):
         proj = dot(vec, F.array(*[F.lit(w) for w in row]))
         bucket = bucket + F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0))
     return bucket

@@ -47,29 +47,24 @@ def _unit(mat: np.ndarray) -> np.ndarray:
     return mat / n[:, None]
 
 
-def train_codebooks(
-    emb: DataFrame,
-    m_sub: int = M_SUB,
-    k_codes: int = K_CODES,
-    sample_target: int = 20_000,
-) -> np.ndarray:
-    """(m_sub, k_codes, sub_dim) codebooks from a bounded driver sample,
+def train_codebooks(emb: DataFrame) -> np.ndarray:
+    """(M_SUB, K_CODES, sub_dim) codebooks from a bounded driver sample,
     deterministic hash-partition init + Lloyd refinement per subspace."""
     emb = emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
     n = emb.count()
-    mod = max(1, n // sample_target)
-    # bounded: ~sample_target rows (deterministic modulo sample), FAISS-style
+    mod = max(1, n // 20_000)
+    # bounded: ~20k rows (deterministic modulo sample), FAISS-style
     pdf = emb.filter(F.col("vec_id") % mod == 0).select("embedding").toPandas()
     unit = _unit(np.vstack(pdf["embedding"].to_numpy()).astype(np.float64))
     dim = unit.shape[1]
-    sub_dim = dim // m_sub
-    books = np.zeros((m_sub, k_codes, sub_dim))
-    for m in range(m_sub):
+    sub_dim = dim // M_SUB
+    books = np.zeros((M_SUB, K_CODES, sub_dim))
+    for m in range(M_SUB):
         sub = unit[:, m * sub_dim : (m + 1) * sub_dim]
-        assign = np.arange(len(sub)) % k_codes
-        cents = np.zeros((k_codes, sub_dim))
+        assign = np.arange(len(sub)) % K_CODES
+        cents = np.zeros((K_CODES, sub_dim))
         for _ in range(LLOYD_ITERS + 1):
-            for k in range(k_codes):
+            for k in range(K_CODES):
                 members = sub[assign == k]
                 if len(members):
                     cents[k] = members.mean(axis=0)

@@ -13,20 +13,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def write_sorted(
-    df: DataFrame, path: str, sort_cols: list[str], mode: str = "overwrite"
-) -> None:
-    df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+def write_sorted(df: DataFrame, path: str, sort_cols: list[str]) -> None:
+    df.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
 
 
 def compact(
-    spark, path: str, target_files: int, schema=None, sort_cols: list[str] | None = None
+    spark, path: str, target_files: int, sort_cols: list[str] | None = None
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
     ``target_files`` files (optionally sorted within each). Crawl stores
@@ -37,9 +33,7 @@ def compact(
     import os
     import shutil
 
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.parquet(path)
-    out = df.repartition(target_files)
+    out = spark.read.parquet(path).repartition(target_files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     tmp = path.rstrip("/") + "._compacting"
@@ -53,16 +47,16 @@ def compact(
 ZBITS = 8
 
 
-def morton_code(a, b, bits: int = ZBITS):
-    """Interleave the low ``bits`` of two non-negative int columns into
+def morton_code(a, b):
+    """Interleave the low ZBITS bits of two non-negative int columns into
     a Z-order (Morton) code — pure JVM bit arithmetic, stays inside
-    whole-stage codegen. Callers map each dimension onto [0, 2^bits)
+    whole-stage codegen. Callers map each dimension onto [0, 2^ZBITS)
     first (rank, bucket, or scaled value)."""
     from pyspark.sql import functions as F
 
     # Column.__or__ is boolean OR — bitwiseOR is the explicit method
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZBITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(a, i) % 2, 2 * i)
         ).bitwiseOR(F.shiftleft(F.shiftright(b, i) % 2, 2 * i + 1))
@@ -70,8 +64,7 @@ def morton_code(a, b, bits: int = ZBITS):
 
 
 def write_zordered(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 8,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 8
 ) -> None:
     """Z-order clustered write: scale both columns onto [0, 2^ZBITS) by
     rank, interleave into a Morton code, range-partition + sort on it,
@@ -99,7 +92,7 @@ def write_zordered(
         coded.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -108,14 +101,12 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_col: str,
-    n_buckets: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table (metastore-backed). Two tables bucketed on
     the same key with the same bucket count join with zero shuffle."""
     (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, bucket_col)
+        df.write.mode("overwrite")
+        .bucketBy(32, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
         .saveAsTable(table)

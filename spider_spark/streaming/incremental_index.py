@@ -138,14 +138,13 @@ def stream_merge(
     state_path: str,
     source_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ):
     """Attach the merge to a file stream of document parquet shards:
     each arriving shard becomes one micro-batch merged into the state.
     Returns the started StreamingQuery (caller awaits/stops)."""
     stream = (
         spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "1")
         .parquet(source_dir)
     )
     return (

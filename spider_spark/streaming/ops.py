@@ -26,11 +26,11 @@ SESSION_GAP_MIN = 30
 WATERMARK = "2 hours"
 
 
-def stream_windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
+def stream_windowed_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window counts per event type with late-data handling."""
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -41,12 +41,12 @@ def stream_windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFra
     )
 
 
-def stream_session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def stream_session_windows(events: DataFrame) -> DataFrame:
     """Native streaming session windows: state merges as events arrive,
     sessions finalize when the watermark passes their end."""
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             "user_id",
@@ -189,18 +189,12 @@ def stream_sessionize(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_corpus_filter(docs: DataFrame) -> DataFrame:
-    """Streaming crawl-shard ingest filter: as document shards land, score
-    quality and scan for PII in one narrow stateless pass, keeping only
-    passing docs (append mode, zero state — scales to any shard rate).
-
-    Shares the exact scoring/redaction expressions with the
-    oracle-checked batch twins (text.analysis.score_quality,
-    text.pii.pii_signals), so streaming output == batch output on the
-    same input — asserted in tests/test_streaming.py.
-    """
+def _passing_docs(docs: DataFrame, *extra) -> DataFrame:
+    """The crawl-ingest gate: non-null text, quality score >= 0.8 and no
+    PII hits, as ONE narrow select (plus any ``extra`` columns) — shared
+    by stream_corpus_filter and corpus_filter_dedup_sink."""
     # No self-joins on a stream (they would allocate join state): both
-    # gates are pure column expressions, evaluated in ONE narrow select.
+    # gates are pure column expressions.
     from spider_spark.text.analysis import quality_score_col
     from spider_spark.text.pii import pii_hits_col
 
@@ -213,10 +207,24 @@ def stream_corpus_filter(docs: DataFrame) -> DataFrame:
             "n_chars",
             quality_score_col().alias("score"),
             (pii_hits_col() == 0).alias("_clean"),
+            *extra,
         )
         .filter((F.col("score") >= 0.8) & F.col("_clean"))
         .drop("_clean")
     )
+
+
+def stream_corpus_filter(docs: DataFrame) -> DataFrame:
+    """Streaming crawl-shard ingest filter: as document shards land, score
+    quality and scan for PII in one narrow stateless pass, keeping only
+    passing docs (append mode, zero state — scales to any shard rate).
+
+    Shares the exact scoring/redaction expressions with the
+    oracle-checked batch twins (text.analysis.score_quality,
+    text.pii.pii_signals), so streaming output == batch output on the
+    same input — asserted in tests/test_streaming.py.
+    """
+    return _passing_docs(docs)
 
 
 def stream_error_monitor(events: DataFrame) -> DataFrame:
@@ -272,36 +280,34 @@ BLOOM_GATE_HASHES = 5
 BLOOM_BITS_SCHEMA = "bit bigint"  # what doc_bloom_bits writes
 
 
-def doc_bloom_bits(fps: DataFrame, fp_col: str = "fp") -> DataFrame:
-    """Distinct Bloom bit positions for a fingerprint relation."""
+def _fp_bits(fps: DataFrame) -> DataFrame:
+    """(fp, bit) for each of the BLOOM_GATE_HASHES Bloom hashes of ``fp``."""
     from spider_spark.operators.sketches import _md5_bucket
 
     ks = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_GATE_HASHES - 1))).alias("k")
-    return (
-        fps.select(fp_col, ks)
-        .select(_md5_bucket(F.col(fp_col), F.col("k"), BLOOM_GATE_BITS).alias("bit"))
-        .distinct()
+    return fps.select("fp", ks).select(
+        "fp", _md5_bucket(F.col("fp"), F.col("k"), BLOOM_GATE_BITS).alias("bit")
     )
 
 
-def bloom_unseen(batch: DataFrame, bits: DataFrame, fp_col: str = "fp") -> DataFrame:
+def doc_bloom_bits(fps: DataFrame) -> DataFrame:
+    """Distinct Bloom bit positions for a fingerprint relation."""
+    return _fp_bits(fps).select("bit").distinct()
+
+
+def bloom_unseen(batch: DataFrame, bits: DataFrame) -> DataFrame:
     """Rows of ``batch`` whose fingerprint is NOT (all hashes set) in
     the Bloom bit relation. The bit table is O(m) and broadcast; the
     batch side never shuffles for the probe."""
-    from spider_spark.operators.sketches import _md5_bucket
-
-    ks = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_GATE_HASHES - 1))).alias("k")
-    probe = batch.select(fp_col, ks).select(
-        fp_col, _md5_bucket(F.col(fp_col), F.col("k"), BLOOM_GATE_BITS).alias("bit")
-    )
     seen = (
-        probe.join(F.broadcast(bits), "bit", "left_semi")
-        .groupBy(fp_col)
+        _fp_bits(batch)
+        .join(F.broadcast(bits), "bit", "left_semi")
+        .groupBy("fp")
         .agg(F.count("*").alias("n_set"))
         .filter(F.col("n_set") == BLOOM_GATE_HASHES)
-        .select(fp_col)
+        .select("fp")
     )
-    return batch.join(seen, fp_col, "left_anti")
+    return batch.join(seen, "fp", "left_anti")
 
 
 def corpus_filter_dedup_sink(state_dir: str, out_dir: str):
@@ -314,27 +320,12 @@ def corpus_filter_dedup_sink(state_dir: str, out_dir: str):
     many shards stream through."""
     from pyspark.errors import AnalysisException
 
-    from spider_spark.text.analysis import quality_score_col
-    from spider_spark.text.pii import pii_hits_col
-
     bits_path = f"{state_dir}/bloom_bits"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        kept = (
-            batch_df.filter(F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                "source",
-                "lang",
-                "n_chars",
-                quality_score_col().alias("score"),
-                (pii_hits_col() == 0).alias("_clean"),
-                F.md5("text").alias("fp"),
-            )
-            .filter((F.col("score") >= 0.8) & F.col("_clean"))
-            .drop("_clean")
-            .dropDuplicates(["fp"])
+        kept = _passing_docs(batch_df, F.md5("text").alias("fp")).dropDuplicates(
+            ["fp"]
         )
         try:
             bits = spark.read.schema(BLOOM_BITS_SCHEMA).parquet(bits_path).distinct()

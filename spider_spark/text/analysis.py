@@ -25,9 +25,9 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a"]
 
 
-def tokens(col: str = "text") -> Column:
-    """Whitespace tokenizer (regex split, trailing-empty-safe)."""
-    return F.split(F.trim(F.col(col)), r"\s+")
+def tokens() -> Column:
+    """Whitespace tokenizer over ``text`` (regex split, trailing-empty-safe)."""
+    return F.split(F.trim(F.col("text")), r"\s+")
 
 
 def _marker_count(toks: Column, words: list[str]) -> Column:

@@ -21,7 +21,7 @@ from spider_spark.catalog import Catalog
 EMBED_DIM = 64
 
 
-def embed_documents(docs: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
+def embed_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, embedding array<float>, n_tokens) via hashed BoW
     projection in one mapInPandas kernel (numpy; token vectors memoised
     per batch)."""
@@ -40,14 +40,14 @@ def embed_documents(docs: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
                 v = cache.get(t)
                 if v is None:
                     rng = np.random.Generator(np.random.PCG64(zlib.crc32(t.encode())))
-                    v = rng.integers(0, 2, size=dim).astype(np.float64) * 2 - 1
+                    v = rng.integers(0, 2, size=EMBED_DIM).astype(np.float64) * 2 - 1
                     cache[t] = v
                 return v
 
             ids, embs, ntoks = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = text.lower().split() if isinstance(text, str) else []
-                acc = np.zeros(dim)
+                acc = np.zeros(EMBED_DIM)
                 for t in toks:
                     acc += tok_vec(t)
                 n = np.linalg.norm(acc)
@@ -65,9 +65,9 @@ def embed_documents(docs: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
     )
 
 
-def text_embed_neighbors(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def text_embed_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus→vector→ANN: embed the documents with the
-    hashed-BoW encoder and return cosine top-k neighbours for the first
+    hashed-BoW encoder and return cosine top-5 neighbours for the first
     5 docs — the full pipeline on the SCALE path end to end: encode is
     one narrow Arrow pass, and the search stage is the multiprobe LSH
     operator (bucket-keyed candidate join, shuffle O(rows·probes/2^P)),
@@ -84,5 +84,5 @@ def text_embed_neighbors(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFr
     )
     emb = emb.cache()
     return ann_lsh_topk_frames(
-        emb.filter(F.col("vec_id") < 5), emb.filter(F.col("vec_id") >= 5), k=k
+        emb.filter(F.col("vec_id") < 5), emb.filter(F.col("vec_id") >= 5), k=5
     )

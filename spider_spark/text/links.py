@@ -148,8 +148,8 @@ def host_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def anchor_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Top-k anchor texts pointing at each destination domain — the
+def anchor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 anchor texts pointing at each destination domain — the
     anchor-text signal a web index aggregates per target. GroupBy pair
     then one window per dst_domain; ties broken by anchor text."""
     links = link_extract(spark, sf_dir)
@@ -159,7 +159,7 @@ def anchor_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     w = Window.partitionBy("dst_domain").orderBy(F.desc("n"), F.asc("anchor"))
     return (
         counts.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select("dst_domain", "anchor", "n", "rank")
     )
 

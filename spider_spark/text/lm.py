@@ -56,8 +56,8 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_doc_scores(Catalog(spark, sf_dir).documents)
 
 
-def word_cooccurrence(spark: SparkSession, sf_dir: str, k: int = 25) -> DataFrame:
-    """Top-k within-document token co-occurrence pairs (w1 < w2, counted
+def word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-25 within-document token co-occurrence pairs (w1 < w2, counted
     once per document).
 
     Per-doc distinct tokens → JVM combination explode → one hash
@@ -83,7 +83,7 @@ def word_cooccurrence(spark: SparkSession, sf_dir: str, k: int = 25) -> DataFram
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("w1"), F.asc("w2"))
-        .limit(k)
+        .limit(25)
     )
 
 
@@ -228,10 +228,8 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pmi_collocations(
-    spark: SparkSession, sf_dir: str, k: int = 20, min_count: int = 5
-) -> DataFrame:
-    """Top-k collocations by pointwise mutual information over adjacent
+def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 collocations by pointwise mutual information over adjacent
     bigrams: pmi = ln( (c_xy/N_bi) / ((c_x/N_uni)·(c_y/N_uni)) ), with a
     min-support cut (PMI is unstable for rare pairs). Collocation mining
     is the standard corpus-exploration tool for spotting boilerplate
@@ -251,11 +249,7 @@ def pmi_collocations(
         lambda a, b: F.concat_ws(" ", a, b),
     )
     bg = docs.select(F.explode(bi).alias("bg"))
-    bfreq = (
-        bg.groupBy("bg")
-        .agg(F.count("*").alias("c_xy"))
-        .filter(F.col("c_xy") >= min_count)
-    )
+    bfreq = bg.groupBy("bg").agg(F.count("*").alias("c_xy")).filter(F.col("c_xy") >= 5)
     uni = (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -286,5 +280,5 @@ def pmi_collocations(
             F.round(pmi, 4).alias("pmi"),
         )
         .orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2"))
-        .limit(k)
+        .limit(20)
     )

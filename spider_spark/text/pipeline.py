@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 from spider_spark.catalog import Catalog
 
 
-def split_col(id_col: str = "doc_id", n_buckets: int = 100):
-    """Deterministic bucket 0..n-1 from md5 of the id (first 8 hex)."""
-    h = F.substring(F.md5(F.col(id_col).cast("string")), 1, 8)
+def split_col(n_buckets: int = 100):
+    """Deterministic bucket 0..n-1 from md5 of doc_id (first 8 hex)."""
+    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
     return F.pmod(F.conv(h, 16, 10).cast("long"), F.lit(n_buckets))
 
 
@@ -328,10 +328,10 @@ DOMAIN_CAP = 20
 
 
 def domain_cap_sample(
-    spark: SparkSession, sf_dir: str, cap: int = DOMAIN_CAP
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-domain quota capping (the FineWeb move against mega-domains
-    swamping the mix): every source keeps at most ``cap`` documents,
+    swamping the mix): every source keeps at most DOMAIN_CAP documents,
     chosen by deterministic md5-hash order — reproducible, independent
     of ingest order, and backfill-stable (a doc's hash rank only moves
     if earlier-ranked docs appear). Returns the per-source audit rollup.
@@ -347,11 +347,11 @@ def domain_cap_sample(
     ranked = docs.select(
         "source", "n_chars", F.row_number().over(w).alias("rk")
     )
-    kept = F.when(F.col("rk") <= cap, 1).otherwise(0)
+    kept = F.when(F.col("rk") <= DOMAIN_CAP, 1).otherwise(0)
     return ranked.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(kept).cast("long").alias("n_kept"),
-        F.sum(F.when(F.col("rk") <= cap, F.col("n_chars"))
+        F.sum(F.when(F.col("rk") <= DOMAIN_CAP, F.col("n_chars"))
               .otherwise(0)).cast("long").alias("kept_chars"),
         F.round(F.sum(kept) / F.count("*"), 4).alias("kept_frac"),
     )

@@ -39,8 +39,6 @@ MAX_DF = MAX_POSTING_LEN  # ubiquitous-term cutoff == the posting cap
 def sparse_cosine_pairs(
     docs: DataFrame,
     threshold: float = COSINE_THRESHOLD,
-    cap: int | None = MAX_POSTING_LEN,
-    observation=None,
 ) -> DataFrame:
     """(doc_id_1 < doc_id_2, cos) for count-vector cosine ≥ threshold.
 
@@ -63,8 +61,7 @@ def sparse_cosine_pairs(
     # a partitioned count window on the term — same shuffle key the
     # posting build needs anyway
     df_t = F.count("*").over(Window.partitionBy("t"))
-    max_df = cap if cap is not None else MAX_DF
-    tf = tf.withColumn("_df", df_t).filter(F.col("_df") <= max_df).drop("_df")
+    tf = tf.withColumn("_df", df_t).filter(F.col("_df") <= MAX_DF).drop("_df")
     s2 = F.sum(F.col("c") * F.col("c")).over(Window.partitionBy("doc_id"))
     postings = tf.select("doc_id", "t", "c", s2.alias("s2"))
     cand = pair_explode(
@@ -73,8 +70,7 @@ def sparse_cosine_pairs(
         ),
         id_field="doc_id",
         payload_fields=("c", "s2"),
-        cap=cap,
-        observation=observation,
+        cap=MAX_DF,
     )
     agg = cand.groupBy("doc_id_1", "doc_id_2").agg(
         F.sum(F.col("c_1") * F.col("c_2")).alias("dot"),

@@ -84,8 +84,8 @@ BM25_B = 0.75
 BM25_TOP = 15
 
 
-def bm25_topk(spark: SparkSession, sf_dir: str, k: int = BM25_TOP) -> DataFrame:
-    """Okapi BM25 top-k retrieval for a fixed conjunctive query
+def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 top-BM25_TOP retrieval for a fixed conjunctive query
     (Robertson & Zaragoza; the Lucene idf variant). Postings for the
     query terms only reach the scoring join — the term filter lands on
     the exploded stream BEFORE any shuffle, so the aggregation is
@@ -118,4 +118,4 @@ def bm25_topk(spark: SparkSession, sf_dir: str, k: int = BM25_TOP) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.round(F.sum(idf * tf_norm), 4).alias("bm25"))
     )
-    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_TOP)

@@ -353,11 +353,9 @@ def rendezvous_assign(hosts: DataFrame, n_shards: int) -> DataFrame:
     )
 
 
-def rendezvous_sharding(
-    spark: SparkSession, sf_dir: str, n_shards: int = 8
-) -> DataFrame:
+def rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawler shard assignment + load inventory: every host is pinned
-    to one of `n_shards` fetcher shards by rendezvous hashing (so a
+    to one of 8 fetcher shards by rendezvous hashing (so a
     shard-pool resize re-routes the minimum number of hosts, and every
     fetcher can compute any host's owner without coordination), then the
     corpus is rolled up per shard: hosts, docs, and characters carried.
@@ -368,7 +366,7 @@ def rendezvous_sharding(
     """
     p = url_parse(spark, sf_dir).select("doc_id", "host")
     docs = Catalog(spark, sf_dir).documents.select("doc_id", "n_chars")
-    assign = rendezvous_assign(p.select("host").distinct(), n_shards)
+    assign = rendezvous_assign(p.select("host").distinct(), 8)
     return (
         p.join(docs, "doc_id")
         .join(assign, "host")

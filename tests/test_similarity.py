@@ -62,6 +62,18 @@ def test_bruteforce_matches_numpy(spark, clustered):
         ] == np.round(cos[qi], 4)[list(cids).index(expected[r.rank - 1])]
 
 
+def test_bruteforce_topk_respects_clusters(clustered):
+    """Exact top-k on planted clusters returns same-cluster neighbours."""
+    label = {r.vec_id: r.cluster for r in clustered.collect()}
+    top = bruteforce_topk(
+        clustered.filter("vec_id < 10").select("vec_id", "embedding"),
+        clustered.filter("vec_id >= 10").select("vec_id", "embedding"),
+        k=3,
+    ).collect()
+    hits = sum(label[r.q_id] == label[r.neighbor_id] for r in top)
+    assert len(top) == 30 and hits / len(top) >= 0.8, f"{hits}/{len(top)}"
+
+
 def test_lsh_recall_on_clusters(spark, clustered):
     queries = clustered.filter("vec_id % 20 = 0").select("vec_id", "embedding")
     cands = clustered.filter("vec_id % 20 != 0").select("vec_id", "embedding")

@@ -41,7 +41,7 @@ def test_schema_required():
     with pytest.raises(ValueError):
         from spider_spark.sources.readers import _schema_for
 
-        _schema_for(None, None)
+        _schema_for(None)
 
 
 def test_partitioned_write_prunes(spark, cat, tmp_path_str):
