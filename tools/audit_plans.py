@@ -141,7 +141,11 @@ def main() -> int:
             print(f"ERROR {name}: {exc}")
             bad += 1
             continue
-        joins = sorted(set(re.findall(r"(\w*HashJoin|SortMergeJoin|CartesianProduct|BroadcastNestedLoopJoin)", plan)))
+        # \b anchors the \w* prefix at a word start: unanchored, every
+        # position inside a long word (bloom_pruned_join's plan prints
+        # 131k-char binary literals) restarts a scan to the word's end,
+        # O(len²) — ~500 s on that one plan.
+        joins = sorted(set(re.findall(r"(\b\w*HashJoin|SortMergeJoin|CartesianProduct|BroadcastNestedLoopJoin)", plan)))
         exch = plan.count("Exchange")
         pushed = plan.count("PushedFilters: [") - plan.count("PushedFilters: []")
         cartesian = any(j in ("CartesianProduct", "BroadcastNestedLoopJoin") for j in joins)
