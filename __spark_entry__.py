@@ -48,10 +48,16 @@ from spider_spark.graph.hyperball import (
     host_harmonic_centrality,
 )
 from spider_spark.multimodal.cdc_chunks import cdc_chunk_dedup
-from spider_spark.multimodal.payload import media_decode_stats, media_dedup
+from spider_spark.multimodal.payload import (
+    audio_chunks,
+    frame_sample,
+    image_tiles,
+    media_decode_stats,
+    media_dedup,
+)
 from spider_spark.operators.dq import data_quality_checks
 from spider_spark.text.tfidf import bm25_topk
-from spider_spark.text.tokenizer import bpe_merges
+from spider_spark.text.tokenizer import bpe_merges, tokenized_chunks
 from spider_spark.dedup.spans import duplicate_spans, substring_dedup_clean
 from spider_spark.text.selection import dsir_weights
 from spider_spark.similarity.bruteforce import ann_bruteforce_topk
@@ -59,6 +65,7 @@ from spider_spark.similarity.lsh import ann_lsh_topk
 from spider_spark.similarity.ivf import ann_ivf_topk
 from spider_spark.similarity.pq import ann_pq_topk
 from spider_spark.similarity.ivfpq import ann_ivfpq_topk
+from spider_spark.similarity.knn_graph import ann_knn_graph_topk
 from spider_spark.similarity.index_store import (
     ann_ivf_prebuilt_topk,
     ann_pq_prebuilt_topk,
@@ -66,6 +73,7 @@ from spider_spark.similarity.index_store import (
 from spider_spark.multimodal.payload import multimodal_meta
 from spider_spark.text.tfidf import tfidf_topk, ngram_topk, inverted_index_stats
 from spider_spark.text.lm import (
+    bigram_logprob,
     perplexity_buckets,
     pmi_collocations,
     unigram_logprob,
@@ -73,6 +81,10 @@ from spider_spark.text.lm import (
     zipf_fit,
 )
 from spider_spark.text.pii import pii_redaction
+from spider_spark.text.embed import text_embed_neighbors
+from spider_spark.text.filters import badwords_filter, compression_ratio, source_overlap
+from spider_spark.text.sparse_sim import sparse_cosine_sim
+from spider_spark.operators.skew import skew_salted_agg
 from spider_spark.graph.algorithms import (
     DAMPING,
     HITS_ITERS,
@@ -83,6 +95,8 @@ from spider_spark.graph.algorithms import (
     dedup_clusters,
     dedup_clusters_approx,
     dup_attribution,
+    host_communities,
+    host_hits,
     mirror_detection,
     supplier_pagerank,
 )
@@ -280,24 +294,6 @@ _MORTON_SQL = " | ".join(
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def _text_embed_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.embed import text_embed_neighbors
-
-    return text_embed_neighbors(spark, sf_dir)
-
-
-def _tokenized_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.tokenizer import tokenized_chunks
-
-    return tokenized_chunks(spark, sf_dir)
-
-
-def _ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.similarity.knn_graph import ann_knn_graph_topk
-
-    return ann_knn_graph_topk(spark, sf_dir)
-
-
 def _minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spider_spark.catalog import Catalog
     from spider_spark.dedup.minhash import (
@@ -314,58 +310,9 @@ def _minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.graph.algorithms import host_hits
-
-    return host_hits(spark, sf_dir)
-
-
-def _host_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.graph.algorithms import host_communities
-
-    return host_communities(spark, sf_dir)
-
-
-def _scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.operators.cdc import scd2_history
-
-    return scd2_history(spark, sf_dir)
-
-
-def _rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.operators.cdc import rfm_segments
-
-    return rfm_segments(spark, sf_dir)
-
-
-def _bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.operators.sketches import bloom_pruned_join
-
-    return bloom_pruned_join(spark, sf_dir)
-
-
-def _bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.lm import bigram_logprob
-
-    return bigram_logprob(spark, sf_dir)
-
-
-def _histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.operators.sketches import histogram_quantiles
-
-    return histogram_quantiles(spark, sf_dir)
-
-
-def _skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.operators.skew import skew_salted_agg
-
-    return skew_salted_agg(spark, sf_dir)
-
-
 def _event_dedup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First event per (user, type, hour): the batch twin of streaming
-    watermark dedup — window row_number keyed on the dedup key, emitted
-    as per-user survivor counts (exact integers)."""
+    """First event per (user, type, hour): window row_number keyed on
+    the dedup key, emitted as per-user survivor counts (exact integers)."""
     from pyspark.sql import Window
 
     from spider_spark.catalog import Catalog
@@ -380,53 +327,6 @@ def _event_dedup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("event_type").cast("long").alias("n_types"),
     )
 
-
-def _url_spam_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.urls import url_spam_score
-
-    return url_spam_score(spark, sf_dir)
-
-
-def _frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.multimodal.payload import frame_sample
-
-    return frame_sample(spark, sf_dir)
-
-
-def _image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.multimodal.payload import image_tiles
-
-    return image_tiles(spark, sf_dir)
-
-
-def _audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.multimodal.payload import audio_chunks
-
-    return audio_chunks(spark, sf_dir)
-
-
-def _sparse_cosine_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.sparse_sim import sparse_cosine_sim
-
-    return sparse_cosine_sim(spark, sf_dir)
-
-
-def _badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.filters import badwords_filter
-
-    return badwords_filter(spark, sf_dir)
-
-
-def _source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.filters import source_overlap
-
-    return source_overlap(spark, sf_dir)
-
-
-def _compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spider_spark.text.filters import compression_ratio
-
-    return compression_ratio(spark, sf_dir)
 
 # Shared DuckDB snippets for the URL operator family (mirror urls.py).
 _URL = U.SYNTH_URL_SQL
@@ -608,7 +508,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_pq_topk": ann_pq_topk,
         "ann_ivf_prebuilt_topk": ann_ivf_prebuilt_topk,
         "ann_pq_prebuilt_topk": ann_pq_prebuilt_topk,
-        "ann_knn_graph_topk": _ann_knn_graph,
+        "ann_knn_graph_topk": ann_knn_graph_topk,
         "lang_id": TX.lang_id,
         "quality_score": TX.quality_score,
         "token_stats": TX.token_stats,
@@ -675,26 +575,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "key_skew_profile": CDC.key_skew_profile,
         "host_triangles": LK.host_triangles,
         "doc_chunking": TP.doc_chunking,
-        "tokenized_chunks": _tokenized_chunks,
-        "sparse_cosine_sim": _sparse_cosine_sim,
-        "badwords_filter": _badwords_filter,
-        "source_overlap": _source_overlap,
-        "compression_ratio": _compression_ratio,
+        "tokenized_chunks": tokenized_chunks,
+        "sparse_cosine_sim": sparse_cosine_sim,
+        "badwords_filter": badwords_filter,
+        "source_overlap": source_overlap,
+        "compression_ratio": compression_ratio,
         "minhash_verified_pairs": _minhash_verified,
-        "host_hits": _host_hits,
-        "host_communities": _host_communities,
-        "scd2_history": _scd2_history,
-        "rfm_segments": _rfm_segments,
-        "bloom_pruned_join": _bloom_pruned_join,
-        "bigram_logprob": _bigram_logprob,
-        "frame_sample": _frame_sample,
-        "image_tiles": _image_tiles,
-        "audio_chunks": _audio_chunks,
-        "url_spam_score": _url_spam_score,
-        "skew_salted_agg": _skew_salted_agg,
+        "host_hits": host_hits,
+        "host_communities": host_communities,
+        "scd2_history": CDC.scd2_history,
+        "rfm_segments": CDC.rfm_segments,
+        "bloom_pruned_join": SK.bloom_pruned_join,
+        "bigram_logprob": bigram_logprob,
+        "frame_sample": frame_sample,
+        "image_tiles": image_tiles,
+        "audio_chunks": audio_chunks,
+        "url_spam_score": U.url_spam_score,
+        "skew_salted_agg": skew_salted_agg,
         "event_dedup_hourly": _event_dedup_hourly,
         "variant_props_agg": A2.variant_props_agg,
-        "histogram_quantiles": _histogram_quantiles,
+        "histogram_quantiles": SK.histogram_quantiles,
         "training_set_build": TP.training_set_build,
         "domain_reputation": U.domain_reputation,
         "sequence_packing": TP.sequence_packing,
@@ -707,7 +607,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "latency_outliers": CDC.latency_outliers,
         "vocab_coverage": SK.vocab_coverage,
         "redirect_chains": FE.redirect_chains,
-        "text_embed_neighbors": _text_embed_neighbors,
+        "text_embed_neighbors": text_embed_neighbors,
         "perplexity_buckets": perplexity_buckets,
         "cluster_representatives": cluster_representatives,
         "rendezvous_sharding": U.rendezvous_sharding,

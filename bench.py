@@ -8,8 +8,7 @@ row-shipping to the driver.
 
 Speed claims are read from perfbench (``python3 perfbench/run.py``:
 interleaved parent/change pairs, end-to-end and per-layer metrics).
-Core and data scaling have their own scripts: tools/bench_scaling.py and
-tools/bench_data_scaling.py.
+Data scaling has its own script: tools/bench_data_scaling.py.
 """
 
 from __future__ import annotations

@@ -26,10 +26,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-# Small dimensions that should always be broadcast in joins at any SF where
-# they remain dimension-sized (TPC-H region/nation are constant-size).
-BROADCAST_DIMS = {"region", "nation", "supplier", "part", "customer"}
-
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [

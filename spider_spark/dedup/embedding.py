@@ -1,10 +1,11 @@
 """Embedding-cosine near-duplicate pairs.
 
-Vector math stays JVM-side (`zip_with` + `aggregate`), in float64 so the
-DuckDB oracle (list_cosine_similarity on DOUBLE[]) matches bit-for-bit
-modulo rounding. The self-join here is the *exact* (test-scale) path; the
-scale path is the LSH-bucketed variant in spider_spark.similarity.lsh —
-same verify step, key-bounded candidates.
+The shared vector math (``dot``, ``norm``, ``with_normed``) stays
+JVM-side (`zip_with` + `aggregate`), in float64 so the DuckDB oracle
+(list_cosine_similarity on DOUBLE[]) matches bit-for-bit modulo
+rounding. ``cosine_neardup_pairs_fast`` is the exact all-pairs path, a
+blocked numpy matmul; the scale path is the LSH-bucketed variant in
+spider_spark.similarity.lsh — same verify step, key-bounded candidates.
 """
 
 from __future__ import annotations
@@ -33,25 +34,6 @@ def with_normed(df: DataFrame) -> DataFrame:
     return df.withColumn("_v", v).withColumn("_norm", norm(F.col("_v")))
 
 
-def cosine_neardup_pairs(
-    emb: DataFrame, threshold: float = COSINE_THRESHOLD
-) -> DataFrame:
-    """All vec pairs with cosine ≥ threshold (exact all-pairs)."""
-    e = with_normed(emb).select("vec_id", "_v", "_norm")
-    a, b = e.alias("a"), e.alias("b")
-    cos = dot(F.col("a._v"), F.col("b._v")) / (F.col("a._norm") * F.col("b._norm"))
-    return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("cos", F.round(cos, 4))
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.col("a.vec_id").alias("vec_id_1"),
-            F.col("b.vec_id").alias("vec_id_2"),
-            "cos",
-        )
-    )
-
-
 # target rows per block: bounds every task to two ~BLOCK_TARGET_ROWS×d
 # float64 matrices regardless of table size (no driver materialisation)
 BLOCK_TARGET_ROWS = 4096
@@ -73,9 +55,9 @@ def cosine_neardup_pairs_fast(
     that is the O(n·√n̄)-ish transfer a blocked exact join costs.
     (For genuinely huge n, LSH-bucket first: spider_spark.similarity.lsh.)
 
-    Semantics identical to :func:`cosine_neardup_pairs` (checked in tests
-    and by the driver's oracle): cos = dot/(‖a‖‖b‖) in float64, round 4,
-    keep pairs with id₁ < id₂ and cos ≥ threshold.
+    Semantics identical to the exact JVM self-join (checked in
+    tests/test_dedup.py and by the driver's oracle): cos = dot/(‖a‖‖b‖)
+    in float64, round 4, keep pairs with id₁ < id₂ and cos ≥ threshold.
     """
     import numpy as np
     import pandas as pd

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import zlib
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
@@ -19,47 +19,15 @@ NGRAM = 3
 JACCARD_THRESHOLD = 0.1
 
 
-def shingles(text_col: Column) -> Column:
-    """Distinct NGRAM-word shingles of a whitespace-tokenised text column.
-    Documents shorter than NGRAM tokens yield an empty array (a bare
-    sequence(0, size-NGRAM) turns DESCENDING for short docs and slice then
-    throws on start 0)."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    idx = F.sequence(F.lit(0), F.size(toks) - NGRAM)
-    arr = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, NGRAM)))
-    )
-    return F.when(F.size(toks) >= NGRAM, arr).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def shingle_table(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh) inverted index; shingle hashed to 64-bit so the
-    shuffle key is fixed-width regardless of document size.
-
-    Note: a hash-combine of per-token hashes (avoiding the shingle
-    string) measured SLOWER here — a nested-lambda reference to the
-    token-hash array makes Catalyst re-inline the whole token pass per
-    element access (O(n²)). The string path is the fast one in practice.
-    """
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
-        .select("doc_id", F.xxhash64("shingle").alias("sh"))
-    )
-
-
 def ngram_hash_table(docs: DataFrame, n: int = NGRAM, distinct: bool = True) -> DataFrame:
     """(doc_id, sh: array<bigint>) — each doc's n-word-window hashes in
     one Arrow-batched narrow pass (memoised crc32 token hashes + numpy
     uint64 affine combine, the minhash_signatures scheme).
 
-    This replaces the JVM transform+slice windowing in the hot pipelines:
-    Spark's interpreted higher-order-function evaluator makes that path
-    ~10× slower than this kernel (measured in BASELINE.md). Downstream
-    semantics are unchanged: set sizes / intersections / frequencies over
-    collision-free 64-bit hashes equal those over the window strings.
+    JVM transform+slice windowing runs in Spark's interpreted
+    higher-order-function evaluator, ~10× slower than this kernel
+    (measured in BASELINE.md). Set sizes / intersections / frequencies
+    over collision-free 64-bit hashes equal those over the window strings.
     Docs shorter than n tokens are dropped (they have no windows in the
     oracles either). ``distinct=False`` keeps positional duplicates (for
     frequency-style consumers like passage dedup).

@@ -26,7 +26,6 @@ import zlib
 
 NUM_PERM = 128
 BANDS = 32
-ROWS_PER_BAND = NUM_PERM // BANDS
 EST_THRESHOLD = 0.4
 
 

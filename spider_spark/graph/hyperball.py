@@ -31,8 +31,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spider_spark.catalog import Catalog
-
 M_REGS = 64  # 2^6 registers — ±13% std err, plenty for centrality ranks
 _ALPHA = 0.709  # standard HLL alpha for m=64
 MAX_ROUNDS = 12

@@ -119,10 +119,9 @@ ERROR_RATE_THRESHOLD_BP = 3000  # 30% in basis points
 
 
 def error_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(hour, user) error-rate monitor with an alert flag — the
-    batch twin of streaming.ops.stream_error_monitor (fetch-health
-    alerting over a crawl event stream). One windowed groupBy; the rate
-    is floor'd basis points (single IEEE division, engine-stable)."""
+    """Per-(hour, user) error-rate monitor with an alert flag
+    (fetch-health alerting over crawl events). One windowed groupBy; the
+    rate is floor'd basis points (single IEEE division, engine-stable)."""
     ev = Catalog(spark, sf_dir).events
     agg = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "user_id")

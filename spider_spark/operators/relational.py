@@ -14,7 +14,7 @@ Scale notes per query are inline; the shared rules:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog

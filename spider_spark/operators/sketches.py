@@ -39,12 +39,6 @@ def _words(docs: DataFrame) -> DataFrame:
     ).filter(F.col("word") != "")
 
 
-WORDS_SQL = """
-    SELECT unnest(string_split_regex(lower(text), '\\s+')) AS word
-    FROM documents WHERE text IS NOT NULL
-"""
-
-
 def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min estimates for the exact top-K corpus words: build the
     d×w sketch with one groupBy, probe it with a broadcast join, report

@@ -1,11 +1,8 @@
-"""Skew mitigation: salted aggregation and salted broadcast-side joins.
+"""Skew mitigation: salted two-phase aggregation.
 
-AQE's skew-join splitting handles most cases at runtime; these explicit
-helpers cover the two shapes AQE can't fix:
-- a single hot GROUP BY key whose partial aggregate still overwhelms one
-  reducer → two-phase salted aggregation;
-- a shuffle join against a small-but-not-tiny side where one probe key is
-  hot → salt the hot side, explode the other.
+AQE's skew-join splitting handles skewed joins at runtime; it cannot fix
+a single hot GROUP BY key whose partial aggregate still overwhelms one
+reducer. Salting the key spreads that key over N_SALTS reducers.
 """
 
 from __future__ import annotations
@@ -47,25 +44,6 @@ def salted_agg(
         else:  # sum / count partials merge by summing
             merges.append(F.sum(name).alias(name))
     return phase1.groupBy(*keys).agg(*merges)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-) -> DataFrame:
-    """Skew-resistant equi-join: the big side gets a random-ish salt in
-    [0, N_SALTS); the small side is exploded ×N_SALTS so every
-    (key, salt) combination exists. A hot key's rows then spread over
-    N_SALTS reducers instead of one."""
-    big_s = big.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(key), F.monotonically_increasing_id()), F.lit(N_SALTS)),
-    )
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1)))
-    )
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")
 
 
 def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,8 +1,9 @@
-"""Plan-shape assertions: the engine's scale guarantees, made testable.
+"""Plan text for shape checks.
 
 ``formatted_plan`` returns the same text ``df.explain("formatted")``
-prints; the predicates below let tests pin down that filters reach the
-scan, dims broadcast, and nothing degenerates into a cartesian product.
+prints, as a string: ``tools/audit_plans.py`` scans it, and the plan
+predicates in ``tests/conftest.py`` assert the engine's scale guarantees
+with it (filters reach the scan, dims broadcast, no cartesian product).
 """
 
 from __future__ import annotations
@@ -14,44 +15,3 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
-
-
-def read_schema_columns(df: DataFrame) -> list[str]:
-    """Columns actually read from the (first) scan — column pruning check."""
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "ReadSchema:" in line:
-            struct = line.split("ReadSchema:", 1)[1].strip()
-            inner = struct[len("struct<") : -1] if struct.startswith("struct<") else struct
-            return [f.split(":")[0] for f in inner.split(",") if f]
-    return []
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def has_cartesian(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of distinct whole-stage-codegen stages in the plan
-    (formatted explain tags operators with ``[codegen id : N]``)."""
-    plan = formatted_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        if "codegen id :" in line:
-            ids.add(line.rsplit("codegen id :", 1)[1].strip(" ]"))
-    return len(ids)
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of Exchange (shuffle/broadcast) nodes in the formatted plan."""
-    return formatted_plan(df).count("Exchange")

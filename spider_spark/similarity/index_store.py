@@ -179,21 +179,3 @@ def ann_pq_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_pq_topk_prebuilt(
         emb.filter(F.col("vec_id") < _pq.N_QUERIES), cand, path
     )
-
-
-def add_to_ivf_index(new_vectors: DataFrame, path: str) -> None:
-    """Incrementally add vectors to a saved IVF index WITHOUT
-    retraining: assign each new vector to its nearest existing centroid
-    (one narrow Arrow pass) and append to the partitioned lists — the
-    FAISS add() contract. Centroids drift from the true means as the
-    corpus grows (standard IVF behaviour); retrain + rebuild when
-    recall degrades. Appends are idempotent per parquet job, and a
-    crashed append leaves at most an orphaned un-committed file."""
-    spark = new_vectors.sparkSession
-    cents, _ = load_ivf_index(spark, path)
-    (
-        _ivf.indexed_candidates(new_vectors, cents)
-        .write.mode("append")
-        .partitionBy("list_id")
-        .parquet(f"{path}/lists")
-    )

@@ -45,7 +45,7 @@ HOPS = 4
 N_ENTRY = 8  # shared deterministic entry points per search
 N_BUCKET_ENTRY = 8  # query-aware entries from the query's LSH bucket
 
-_GRAPH_VERSION = 2  # v2: is_ring column (permanent long-range layer marker)
+_GRAPH_VERSION = 3  # v3: (src, dst, cos) adjacency
 
 
 def _scored(pairs: DataFrame, vecs: DataFrame) -> DataFrame:
@@ -105,7 +105,7 @@ def knn_graph_build(
     if total <= 1:  # no pairs to link (and `% total` would be `% 0`)
         spark = emb.sparkSession
         return spark.createDataFrame(
-            [], "src bigint, dst bigint, cos double, is_ring boolean"
+            [], "src bigint, dst bigint, cos double"
         )
     ring_edges = None
     for j in range(1, M_NEIGHBORS // 2 + 1):
@@ -149,11 +149,7 @@ def knn_graph_build(
         .join(cur.select("src", "dst"), ["src", "dst"], "left_anti"),
         vecs,
     )
-    # is_ring marks the permanent long-range layer so add_to_knn_graph
-    # can re-prune k-NN edges without ever evicting ring edges
-    return cur.distinct().withColumn("is_ring", F.lit(False)).unionByName(
-        ring_scored.distinct().withColumn("is_ring", F.lit(True))
-    )
+    return cur.distinct().unionByName(ring_scored.distinct())
 
 
 def materialized_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,7 +193,6 @@ def _search_twin(
     queries: DataFrame,
     graph: DataFrame,
     candidates: DataFrame,
-    k: int,
 ) -> DataFrame:
     """Exact replica of the distributed beam search, run on the driver.
 
@@ -281,7 +276,7 @@ def _search_twin(
             expanded.update(beam_nodes)
             for n in new:
                 pool[n] = score(n)
-        top = sorted(pool, key=lambda n: (-pool[n], n))[:k]
+        top = sorted(pool, key=lambda n: (-pool[n], n))[:TOP_K]
         for rank, n in enumerate(top, start=1):
             out.append((q_id, n, _round_half_up(pool[n], 4), rank))
 
@@ -294,7 +289,6 @@ def knn_graph_search(
     queries: DataFrame,
     graph: DataFrame,
     candidates: DataFrame,
-    k: int = TOP_K,
     small_twin_nodes: int | None = SMALL_SEARCH_NODES,
 ) -> DataFrame:
     """(q_id, neighbor_id, cos, rank) — best-first beam search over the
@@ -314,7 +308,7 @@ def knn_graph_search(
     from spider_spark.similarity.lsh import bucket_id
 
     if small_twin_nodes is not None and candidates.count() <= small_twin_nodes:
-        return _search_twin(queries, graph, candidates, k)
+        return _search_twin(queries, graph, candidates)
 
     cvecs = with_normed(candidates).select(
         F.col("vec_id").alias("node"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")
@@ -387,7 +381,7 @@ def knn_graph_search(
     wk = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("node"))
     return (
         pool.withColumn("rank", F.row_number().over(wk).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "q_id",
             F.col("node").alias("neighbor_id"),
@@ -395,58 +389,6 @@ def knn_graph_search(
             "rank",
         )
     )
-
-
-def add_to_knn_graph(
-    new_vectors: DataFrame,
-    graph: DataFrame,
-    corpus: DataFrame,
-) -> DataFrame:
-    """Insert vectors into an existing graph WITHOUT a full rebuild (the
-    HNSW add() contract, mirroring similarity.index_store.add_to_ivf_index):
-    beam-search each new vector against the stored adjacency to find its
-    ~M_NEIGHBORS nearest corpus nodes, connect it forward to them, and
-    give each found node the reverse edge, re-pruned to its top
-    M_NEIGHBORS — so insertion cost is one search batch + one keyed window, independent of corpus
-    size. Returns the updated (src, dst, cos, is_ring) adjacency.
-
-    Scope of the re-prune: ONLY nodes that actually received a reverse
-    edge, and only their k-NN edges — untouched nodes pass through
-    unchanged, and ring edges (the permanent long-range layer the build
-    keeps past its own prune; recall collapses to 0 on clustered data
-    without them) are never eviction candidates. Inserted edges'
-    cosines are recomputed at the storage precision (6 dp, _scored) so
-    the merged adjacency never ranks mixed-precision values. Like IVF
-    add, quality drifts as the corpus grows (new↔new edges only form
-    through later adds' searches); rebuild when recall degrades."""
-    found = knn_graph_search(new_vectors, graph, corpus, k=M_NEIGHBORS)
-    if "is_ring" not in graph.columns:  # pre-v2 stored adjacency
-        graph = graph.withColumn("is_ring", F.lit(False))
-    # re-score the found pairs at storage precision (search rounds to 4
-    # dp for its output contract; the stored relation carries 6 dp)
-    vecs = with_normed(
-        corpus.select("vec_id", "embedding").unionByName(
-            new_vectors.select("vec_id", "embedding")
-        )
-    ).select(
-        F.col("vec_id").alias("id"), F.col("_v").alias("v"), F.col("_norm").alias("n")
-    )
-    fwd = _scored(
-        found.select(F.col("q_id").alias("src"), F.col("neighbor_id").alias("dst")),
-        vecs,
-    ).withColumn("is_ring", F.lit(False))
-    rev = fwd.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), "cos", "is_ring"
-    )
-    touched = rev.select("src").distinct()
-    untouched = graph.join(touched, "src", "left_anti")
-    touched_ring = graph.filter(F.col("is_ring")).join(touched, "src", "left_semi")
-    repruned = _top_m(
-        graph.filter(~F.col("is_ring")).join(touched, "src", "left_semi")
-        .unionByName(rev),
-        M_NEIGHBORS,
-    )
-    return untouched.unionByName(touched_ring).unionByName(repruned).unionByName(fwd)
 
 
 def ann_knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

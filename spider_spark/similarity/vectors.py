@@ -20,9 +20,6 @@ from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
 
-DIMS = 64
-
-
 def _exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir).embeddings
     # v widened to double IMMEDIATELY: Spark's '/' promotes to double

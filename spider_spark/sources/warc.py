@@ -47,143 +47,6 @@ def warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(serialize, schema="doc_id bigint, record binary")
 
 
-def write_warc_segments(spark: SparkSession, sf_dir: str, out_dir: str, n_segments: int = 4) -> None:
-    """Write the corpus as REAL .warc segment files: records concatenated
-    per segment, one file per partition, written executor-side (no
-    driver collection) — the on-disk layout a crawler hands to an
-    ingest pipeline.
-
-    NOTE: ``out_dir`` is opened with plain ``open()`` inside the task,
-    so this writer assumes a filesystem shared between executors (local
-    mode, NFS, or a FUSE-mounted object store). On a multi-node cluster
-    writing to HDFS/S3, route the bytes through a Hadoop-FS OutputStream
-    or a DataFrameWriter binary sink instead. The directory is created
-    inside the task (not only on the driver) so executor-local paths at
-    least fail loudly with a consistent layout rather than ENOENT."""
-    recs = warc_records(spark, sf_dir).repartition(n_segments)
-
-    def dump(it):
-        import os
-        import uuid
-
-        rows = list(it)
-        if rows:
-            os.makedirs(out_dir, exist_ok=True)
-            with open(os.path.join(out_dir, f"seg_{uuid.uuid4().hex}.warc"), "wb") as f:
-                for r in rows:
-                    f.write(bytes(r["record"]))
-        return iter(())
-
-    recs.rdd.mapPartitions(dump).count()
-
-
-WARC_ROW_FIELDS = (
-    "segment",
-    "warc_type",
-    "target_uri",
-    "content_length",
-    "body_md5",
-    "malformed",
-    "bytes_skipped",
-)
-
-
-def parse_warc_stream(seg: str, raw: bytes):
-    """Sequential Content-Length-framed WARC parser over one segment's
-    bytes, yielding WARC_ROW_FIELDS tuples. PERMISSIVE malformed-record
-    policy (mirrors the CSV reader's): a record with no header
-    terminator, a non-WARC magic, a bad Content-Length, or a truncated
-    body is emitted flagged — never dropped silently, never a task
-    failure. Shared by the binaryFile+mapInPandas reader and the
-    'warc' Python data source."""
-    import hashlib
-
-    pos = 0
-    while pos < len(raw):
-        head_end = raw.find(b"\r\n\r\n", pos)
-        if head_end < 0:
-            # no header terminator: the rest of the segment is
-            # unframeable — one flagged row quantifies the loss
-            yield (seg, "", "", -1, "", True, len(raw) - pos)
-            break
-        lines = raw[pos:head_end].decode("ascii", "replace").split("\r\n")
-        fields = {}
-        for line in lines[1:]:
-            k, _, v = line.partition(": ")
-            fields[k] = v
-        try:
-            clen = int(fields.get("Content-Length", ""))
-        except ValueError:
-            clen = -1
-        bad = not lines[0].startswith("WARC/") or clen < 0
-        if bad:
-            # resync on the RECORD BOUNDARY (CRLFCRLF + magic), not the
-            # bare magic — a body containing the literal "WARC/" must
-            # not re-frame mid-body. The boundary's CRLFCRLF may already
-            # be consumed by this record's own header terminator, so
-            # accept a magic at head_end+4 directly.
-            after = head_end + 4
-            if raw.startswith(b"WARC/", after):
-                nxt = after
-            else:
-                hit = raw.find(b"\r\n\r\nWARC/", after)
-                nxt = -1 if hit < 0 else hit + 4
-            skipped = (nxt if nxt >= 0 else len(raw)) - pos
-            yield (
-                seg,
-                fields.get("WARC-Type", ""),
-                fields.get("WARC-Target-URI", ""),
-                clen,
-                "",
-                True,
-                skipped,
-            )
-            if nxt < 0:
-                break
-            pos = nxt
-            continue
-        body = raw[head_end + 4 : head_end + 4 + clen]
-        truncated = len(body) < clen
-        pos = head_end + 4 + clen + 4  # trailing CRLFCRLF
-        yield (
-            seg,
-            fields.get("WARC-Type", ""),
-            fields.get("WARC-Target-URI", ""),
-            clen,
-            hashlib.md5(body).hexdigest(),
-            truncated,
-            0,
-        )
-
-
-def read_warc_segments(spark: SparkSession, path: str) -> DataFrame:
-    """Ingest raw .warc segment files: binaryFile source + an
-    Arrow-batched sequential parser driven by Content-Length (the real
-    WARC framing — never split on byte patterns the body could
-    contain). Parallelism = number of segment files, the same contract
-    as Common Crawl's per-file WARC processing."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(f"{path}/*.warc")
-
-    def parse_files(batches):
-        for pdf in batches:
-            rows = []
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                seg = fpath.rsplit("/", 1)[-1]
-                rows.extend(parse_warc_stream(seg, bytes(blob)))
-            yield pd.DataFrame(rows, columns=list(WARC_ROW_FIELDS))
-
-    return files.select("path", "content").mapInPandas(
-        parse_files,
-        schema=(
-            "segment string, warc_type string, target_uri string, "
-            "content_length bigint, body_md5 string, malformed boolean, "
-            "bytes_skipped bigint"
-        ),
-    )
-
-
 def warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parse raw WARC record bytes to typed columns: version, type,
     target URI, declared + actual content length, and an md5 body

@@ -62,8 +62,8 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_score_col() -> Column:
     """The quality-score COLUMN expression over a `text` column: length +
     non-stopword + alphabetic-char ratios, rounded to 4 dp. Exposed as an
-    expression so batch (score_quality) and streaming
-    (stream_corpus_filter) gate on literally the same arithmetic.
+    expression so batch (score_quality) and the streaming ingest gate
+    (streaming.ops._passing_docs) use literally the same arithmetic.
 
     Rounding is ``floor(x*1e4 + 0.5)/1e4`` rather than ``round(x, 4)``:
     the raw score is the same IEEE double in every engine (identical

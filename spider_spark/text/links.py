@@ -37,10 +37,6 @@ def _target(k: int) -> Column:
     return (F.col("doc_id") * 3 + k * 7 + 1) % TARGET_MOD
 
 
-def TARGET_SQL(k: int) -> str:
-    return f"(doc_id * 3 + {k} * 7 + 1) % {TARGET_MOD}"
-
-
 def _href(t: Column) -> Column:
     return F.concat(
         F.lit("https://site"),

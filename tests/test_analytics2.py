@@ -215,19 +215,26 @@ def test_canonicalize_idempotent_property(spark):
     )
     port = st.sampled_from(["", ":443", ":8080"])
 
+    # draw every example first, then canonicalize them all in one
+    # DataFrame and the results again in a second: two Spark jobs
+    urls = []
+
     @settings(max_examples=30, deadline=None)
     @given(host, port, path, qs)
-    def check(h, p, pa, q):
-        url = f"https://{h}{p}{pa}{q}"
-        df = spark.createDataFrame([(url,)], "url string").select(
-            canonicalize(F.col("url")).alias("c1")
-        )
-        once = df.first()["c1"]
-        twice = (
-            spark.createDataFrame([(once,)], "url string")
-            .select(canonicalize(F.col("url")).alias("c2"))
-            .first()["c2"]
-        )
-        assert twice == once, (url, once, twice)
+    def draw(h, p, pa, q):
+        urls.append(f"https://{h}{p}{pa}{q}")
 
-    check()
+    draw()
+    once = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select("url", canonicalize(F.col("url")).alias("c1"))
+        .collect()
+    )
+    twice = (
+        spark.createDataFrame([(r.url, r.c1) for r in once], "url string, c1 string")
+        .select("url", "c1", canonicalize(F.col("c1")).alias("c2"))
+        .collect()
+    )
+    assert len(twice) == len(urls) > 1
+    for r in twice:
+        assert r.c2 == r.c1, (r.url, r.c1, r.c2)

@@ -82,30 +82,3 @@ def test_pq_index_roundtrip(spark, frames, tmp_path_factory):
     inline = _rows(ann_pq_topk_frames(queries, candidates))
     prebuilt = _rows(ann_pq_topk_prebuilt(queries, candidates, path))
     assert prebuilt == inline
-
-
-def test_ivf_incremental_add(spark, frames, tmp_path_factory):
-    """add_to_ivf_index appends without retraining: new vectors become
-    searchable, old answers only change where a new vector genuinely
-    ranks higher."""
-    from pyspark.sql import functions as F
-
-    from spider_spark.similarity.index_store import add_to_ivf_index
-
-    queries, candidates = frames
-    half1 = candidates.filter(F.col("vec_id") % 2 == 0)
-    half2 = candidates.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path_factory.mktemp("ivf_add"))
-    save_ivf_index(half1, path)
-    before = _rows(ann_ivf_topk_prebuilt(queries, path))
-    add_to_ivf_index(half2, path)
-    after = ann_ivf_topk_prebuilt(queries, path)
-    got = _rows(after)
-    assert got != before  # the added half changes some top-k
-    added_ids = {r.vec_id for r in half2.select("vec_id").collect()}
-    assert any(r[1] in added_ids for r in got), "added vectors never surfaced"
-    # per-query result count is still k-bounded and ranked 1..k
-    import collections
-
-    per_q = collections.Counter(r[0] for r in got)
-    assert all(v <= 5 for v in per_q.values())

@@ -74,7 +74,7 @@ def test_domain_stats_shares_sum_to_one(spark, sf_dir):
 
 
 def test_crawl_plans_no_cartesian(spark, sf_dir):
-    from spider_spark.plans.explain import has_cartesian
+    from tests.conftest import has_cartesian
 
     for fn in (CW.gopher_repetition, CW.passage_dedup, CW.contamination_check):
         assert not has_cartesian(fn(spark, sf_dir)), fn.__name__

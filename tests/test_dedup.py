@@ -16,10 +16,7 @@ from spider_spark.dedup.minhash import (
     minhash_signatures,
 )
 from spider_spark.dedup.simhash import simhash_pairs
-from spider_spark.dedup.embedding import (
-    cosine_neardup_pairs,
-    cosine_neardup_pairs_fast,
-)
+from spider_spark.dedup.embedding import cosine_neardup_pairs_fast, dot, with_normed
 
 
 WORDS = [
@@ -137,6 +134,24 @@ def test_simhash_finds_neardups(corpus):
     assert hits >= 3, f"simhash found only {hits}/4 near-dup pairs"
     # exact dups are at hamming 0 and must always be found
     assert (4, 200) in pairs and (5, 201) in pairs
+
+
+def cosine_neardup_pairs(emb, threshold):
+    """All vec pairs with cosine ≥ threshold, as an exact JVM self-join:
+    the reference the shipped blocked kernel must match."""
+    e = with_normed(emb).select("vec_id", "_v", "_norm")
+    a, b = e.alias("a"), e.alias("b")
+    cos = dot(F.col("a._v"), F.col("b._v")) / (F.col("a._norm") * F.col("b._norm"))
+    return (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .withColumn("cos", F.round(cos, 4))
+        .filter(F.col("cos") >= threshold)
+        .select(
+            F.col("a.vec_id").alias("vec_id_1"),
+            F.col("b.vec_id").alias("vec_id_2"),
+            "cos",
+        )
+    )
 
 
 def test_embedding_fast_kernel_matches_jvm_path(spark):

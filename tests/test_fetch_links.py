@@ -129,21 +129,6 @@ def test_host_triangles_symmetry(spark, sf_dir):
     assert rows == expect
 
 
-def test_warc_segment_roundtrip(spark, sf_dir, tmp_path):
-    from spider_spark.sources.warc import read_warc_segments, warc_parse, write_warc_segments
-
-    out = str(tmp_path / "warcs")
-    write_warc_segments(spark, sf_dir, out, n_segments=4)
-    parsed = read_warc_segments(spark, out)
-    rows = parsed.collect()
-    direct = {r["body_md5"] for r in warc_parse(spark, sf_dir).collect()}
-    assert len(rows) == len(direct) == 500
-    assert {r["body_md5"] for r in rows} == direct
-    assert {r["warc_type"] for r in rows} == {"response"}
-    segs = {r["segment"] for r in rows}
-    assert len(segs) >= 2, "expected multiple segment files"
-
-
 def test_redirect_chains_follow_ring(spark, sf_dir, cat):
     from spider_spark.text.fetch import redirect_chains
 
@@ -168,90 +153,3 @@ def test_redirect_chains_follow_ring(spark, sf_dir, cat):
         assert (r["final_doc"], r["n_hops"], r["unresolved"]) == (
             cur, hops, cur in redirs
         ), d
-
-
-def test_warc_malformed_records_flagged(spark, sf_dir, tmp_path):
-    """PERMISSIVE policy: corrupt records are flagged + resynced past,
-    good records around them still parse."""
-    import os
-
-    from spider_spark.sources.warc import read_warc_segments
-
-    out = str(tmp_path / "warcs_bad")
-    os.makedirs(out)
-    good = (
-        b"WARC/1.0\r\nWARC-Type: response\r\n"
-        b"WARC-Target-URI: https://a.example.com/x\r\nContent-Length: 5\r\n\r\n"
-        b"hello\r\n\r\n"
-    )
-    bad_magic = b"JUNK!!\r\nFoo: bar\r\n\r\noops\r\n\r\n"
-    bad_len = (
-        b"WARC/1.0\r\nWARC-Type: response\r\n"
-        b"WARC-Target-URI: https://a.example.com/y\r\nContent-Length: zzz\r\n\r\n"
-    )
-    truncated = (
-        b"WARC/1.0\r\nWARC-Type: response\r\n"
-        b"WARC-Target-URI: https://a.example.com/z\r\nContent-Length: 999\r\n\r\nshort"
-    )
-    with open(os.path.join(out, "seg_mixed.warc"), "wb") as f:
-        f.write(good + bad_magic + bad_len + good + truncated)
-    rows = read_warc_segments(spark, out).collect()
-    ok = [r for r in rows if not r["malformed"]]
-    bad = [r for r in rows if r["malformed"]]
-    assert len(ok) == 2 and all(r["content_length"] == 5 for r in ok)
-    assert len(bad) >= 2  # bad magic, bad length, truncated tail
-    assert any(r["content_length"] == -1 for r in bad)
-    # loss is quantified: the bad-magic row skips exactly that record
-    assert {r["bytes_skipped"] for r in bad if r["bytes_skipped"] > 0} >= {
-        len(bad_magic)
-    }
-    assert all(r["bytes_skipped"] == 0 for r in ok)
-
-
-def test_warc_body_containing_magic_not_reframed(spark, tmp_path):
-    """A body containing the literal 'WARC/' must parse as ONE record:
-    resync happens on the record boundary (CRLFCRLF + magic), never on
-    a bare magic inside a body."""
-    import os
-
-    from spider_spark.sources.warc import read_warc_segments
-
-    out = str(tmp_path / "warcs_magic")
-    os.makedirs(out)
-    body = b"see WARC/1.0 spec for details"
-    rec = (
-        b"WARC/1.0\r\nWARC-Type: response\r\n"
-        b"WARC-Target-URI: https://a.example.com/spec\r\n"
-        + f"Content-Length: {len(body)}\r\n\r\n".encode()
-        + body
-        + b"\r\n\r\n"
-    )
-    # preceded by a malformed record so the resync path actually runs
-    junk = b"JUNK!!\r\nFoo: bar\r\n\r\nnoise with WARC/ inside\r\n\r\n"
-    with open(os.path.join(out, "seg.warc"), "wb") as f:
-        f.write(junk + rec + rec)
-    rows = read_warc_segments(spark, out).collect()
-    ok = [r for r in rows if not r["malformed"]]
-    assert len(ok) == 2
-    assert all(r["content_length"] == len(body) for r in ok)
-
-
-def test_warc_python_datasource(spark, sf_dir, tmp_path):
-    """spark.read.format('warc') — the Spark 4 Python data source —
-    returns exactly what the binaryFile+mapInPandas path returns, with
-    one partition per segment file."""
-    from spider_spark.sources.warc import read_warc_segments, write_warc_segments
-    from spider_spark.sources.warc_datasource import register_warc_source
-
-    out = str(tmp_path / "warcs_ds")
-    write_warc_segments(spark, sf_dir, out, n_segments=4)
-    register_warc_source(spark)
-    ds = spark.read.format("warc").load(out)
-    via_binary = read_warc_segments(spark, out)
-    assert ds.schema == via_binary.schema
-    a = {tuple(r) for r in ds.collect()}
-    b = {tuple(r) for r in via_binary.collect()}
-    assert a == b and a
-    # parallelism contract: one partition per segment file
-    n_segs = ds.select("segment").distinct().count()
-    assert ds.rdd.getNumPartitions() == n_segs

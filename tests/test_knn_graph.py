@@ -110,79 +110,6 @@ def test_prebuilt_graph_equals_inline(spark, sf_dir):
     assert materialized_knn_graph(spark, sf_dir).count() > 0
 
 
-def test_add_to_knn_graph_incremental(clustered):
-    """The add() contract: vectors inserted into a stored graph become
-    findable by search without a rebuild, and existing nodes keep their
-    degree bound after absorbing reverse edges."""
-    from spider_spark.similarity.knn_graph import add_to_knn_graph
-
-    # hold out 5 vectors from cluster 0 (ids 10..14), build on the rest
-    base = clustered.filter("vec_id >= 15")
-    newv = clustered.filter("vec_id >= 10 AND vec_id < 15")
-    q = clustered.filter("vec_id < 10")  # queries are cluster 0 too
-    g0 = knn_graph_build(base).cache()
-    g0.count()
-    g1 = add_to_knn_graph(newv, g0, base).cache()
-
-    # inserted nodes have forward edges; existing nodes stay <= m + ring
-    new_deg = (
-        g1.filter(F.col("src").between(10, 14)).groupBy("src").count().count()
-    )
-    assert new_deg == 5, "every inserted vector must be connected"
-    max_deg = (
-        g1.filter(~F.col("src").between(10, 14))
-        .groupBy("src")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert max_deg <= M_NEIGHBORS + M_NEIGHBORS // 2
-
-    # a same-cluster query now retrieves inserted vectors via the graph
-    got = {
-        r.neighbor_id
-        for r in knn_graph_search(
-            q, g1, clustered.filter("vec_id >= 10"), k=10
-        ).collect()
-    }
-    assert got & set(range(10, 15)), "inserted vectors must be findable"
-
-
-def test_add_preserves_ring_edges_and_untouched_nodes(clustered):
-    """Round-5 regression (advice item): add() must not strip the
-    permanent ring layer graph-wide, must leave untouched nodes' edges
-    byte-identical, and must store inserted edges at the same 6-dp
-    precision as the build's edges."""
-    from spider_spark.similarity.knn_graph import add_to_knn_graph
-
-    base = clustered.filter("vec_id >= 15")
-    newv = clustered.filter("vec_id >= 10 AND vec_id < 15")
-    g0 = knn_graph_build(base).cache()
-    g0.count()
-    g1 = add_to_knn_graph(newv, g0, base).cache()
-
-    ring0 = {(r.src, r.dst) for r in g0.filter("is_ring").collect()}
-    ring1 = {(r.src, r.dst) for r in g1.filter("is_ring").collect()}
-    assert ring0 == ring1, "ring layer must survive add() unchanged"
-
-    new_ids = set(range(10, 15))
-    fwd = {
-        (r.src, r.dst): r.cos
-        for r in g1.filter(F.col("src").between(10, 14)).collect()
-    }
-    touched = {d for (_, d) in fwd}
-    e0 = {(r.src, r.dst, r.cos, r.is_ring) for r in g0.collect()}
-    e1 = {(r.src, r.dst, r.cos, r.is_ring) for r in g1.collect()}
-    untouched0 = {e for e in e0 if e[0] not in touched}
-    untouched1 = {e for e in e1 if e[0] not in touched and e[0] not in new_ids}
-    assert untouched0 == untouched1, "untouched nodes must pass through"
-
-    # kept reverse edges carry the SAME stored-precision cosine as their
-    # forward twin (no 4-dp search values in the adjacency)
-    for r in g1.filter(F.col("dst").between(10, 14)).collect():
-        assert fwd[(r.dst, r.src)] == r.cos
-
-
 def test_search_twin_equals_distributed(built):
     """The driver twin that serves small-corpus searches must be an
     EXACT replica of the distributed beam search — same entries, same

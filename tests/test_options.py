@@ -1,12 +1,17 @@
-"""Guard: every default-valued parameter in spider_spark/ is set by some
-caller. A default no call site overrides is a configuration nothing
-tests or benchmarks; it belongs in a module constant or a literal.
+"""Guards on what spider_spark/ may contain. Pure AST scans (no Spark).
 
-Pure AST scan (no Spark). Calls are matched to definitions by bare
-function name, so a call to any same-named function counts: the scan
-can miss a knob, never invent one. A parameter counts as set when a
-call passes it by keyword, passes enough positional arguments to reach
-it, or unpacks ``*args``/``**kwargs``.
+Options: every default-valued parameter is set by some caller. A default
+no call site overrides is a configuration nothing tests or benchmarks;
+it belongs in a module constant or a literal. Calls are matched to
+definitions by bare function name, so a call to any same-named function
+counts: the scan can miss a knob, never invent one. A parameter counts
+as set when a call passes it by keyword, passes enough positional
+arguments to reach it, or unpacks ``*args``/``**kwargs``.
+
+Reachability: every top-level definition is reached from a shipped entry
+point. Names are followed by bare name too, so the scan can miss dead
+code (a same-named definition or attribute elsewhere masks it), never
+invent it.
 """
 
 from __future__ import annotations
@@ -82,4 +87,78 @@ def test_every_default_parameter_is_set_by_a_caller():
     assert not unset, (
         f"{len(unset)} default-valued parameters no caller sets "
         "(make each a constant or literal):\n" + "\n".join(unset)
+    )
+
+
+# --- reachability -----------------------------------------------------------
+# Engine code is what a shipped entry point reaches: the driver contract,
+# the per-query bench, the tools and perfbench. Tests check the engine;
+# they do not make code part of it.
+ENTRY_POINTS = ["__spark_entry__.py", "bench.py", "tools", "perfbench"]
+
+
+def _used_names(tree: ast.AST) -> set[str]:
+    """Every bare name an AST mentions: loads, attribute names,
+    ``from … import`` names, and identifier-shaped string constants
+    (``getattr``-style references)."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.asname or node.name.rsplit(".", 1)[-1])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value.isidentifier():
+                names.add(node.value)
+    return names
+
+
+def _defined_names(stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return [t.id for t in targets if isinstance(t, ast.Name)]
+    return []
+
+
+def unreached_definitions() -> list[str]:
+    defs = defaultdict(list)  # bare name -> [(where, defining statement)]
+    roots = set()
+    for f in sorted(ENGINE.rglob("*.py")):
+        for stmt in ast.parse(f.read_text()).body:
+            names = _defined_names(stmt)
+            if not names:
+                if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                    roots |= _used_names(stmt)  # module-level code runs on import
+                continue
+            for name in names:
+                defs[name].append((f"{f.relative_to(REPO)}::{name}", stmt))
+    for rel in ENTRY_POINTS:
+        for f in _py_files(rel):
+            roots |= _used_names(ast.parse(f.read_text()))
+    seen, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, stmt in defs.get(name, []):
+            todo.extend(_used_names(stmt) - seen)
+    return sorted(
+        where
+        for name, sites in defs.items()
+        if name not in seen and not (name.startswith("__") and name.endswith("__"))
+        for where, _ in sites
+    )
+
+
+def test_every_engine_definition_is_reached_from_an_entry_point():
+    unreached = unreached_definitions()
+    assert not unreached, (
+        f"{len(unreached)} spider_spark/ definitions no entry point reaches "
+        f"({', '.join(ENTRY_POINTS)}); delete them, or move test-only "
+        "helpers into tests/:\n" + "\n".join(unreached)
     )

@@ -11,14 +11,13 @@ import __spark_entry__ as entrymod
 from spider_spark.operators.relational import q3_shipping_priority, q6_forecast_revenue
 from spider_spark.operators.joins_ext import range_join
 from spider_spark.dedup.jaccard import ngram_jaccard_pairs
-from spider_spark.plans.explain import (
-    codegen_stage_count,
+from tests.conftest import (
+    SF_DIR,
     has_broadcast_join,
     has_cartesian,
     has_pushed_filters,
     read_schema_columns,
 )
-from tests.conftest import SF_DIR
 
 
 def test_q6_filters_pushed_and_columns_pruned(spark):
@@ -53,7 +52,8 @@ def test_q1_partial_aggregation(spark):
 
 def test_crawl_ops_plan_shapes(spark):
     """Round-2 crawl-tier operators keep their promised plan shapes."""
-    from spider_spark.plans.explain import exchange_count, formatted_plan
+    from spider_spark.plans.explain import formatted_plan
+    from tests.conftest import exchange_count
 
     q = entrymod.queries()
     # narrow scan-speed passes: zero exchanges at any scale

@@ -94,7 +94,7 @@ def test_lsh_recall_on_clusters(spark, clustered):
 
 
 def test_lsh_no_cross_join(spark, clustered):
-    from spider_spark.plans.explain import has_cartesian
+    from tests.conftest import has_cartesian
 
     queries = clustered.filter("vec_id % 20 = 0").select("vec_id", "embedding")
     cands = clustered.filter("vec_id % 20 != 0").select("vec_id", "embedding")
@@ -125,7 +125,7 @@ def test_ivf_recall_on_clusters(spark, clustered):
 
 
 def test_ivf_no_cross_join(spark, clustered):
-    from spider_spark.plans.explain import has_cartesian
+    from tests.conftest import has_cartesian
     from spider_spark.similarity.ivf import ann_ivf_topk_frames
 
     queries = clustered.filter("vec_id % 20 = 0").select("vec_id", "embedding")
@@ -163,7 +163,7 @@ def test_pq_recall_on_clusters(spark, clustered):
 
 
 def test_pq_no_cross_join(spark, clustered):
-    from spider_spark.plans.explain import has_cartesian
+    from tests.conftest import has_cartesian
     from spider_spark.similarity.pq import ann_pq_topk_frames
 
     queries = clustered.filter("vec_id % 20 = 0").select("vec_id", "embedding")
@@ -201,7 +201,7 @@ def test_ivfpq_recall_on_clusters(spark, clustered):
 
 
 def test_ivfpq_no_cross_join(spark, clustered):
-    from spider_spark.plans.explain import has_cartesian
+    from tests.conftest import has_cartesian
     from spider_spark.similarity.ivfpq import ann_ivfpq_topk_frames
 
     queries = clustered.filter("vec_id % 20 = 0").select("vec_id", "embedding")

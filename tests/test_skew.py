@@ -1,10 +1,10 @@
-"""Salted aggregation / join equivalence with the unsalted plans."""
+"""Salted aggregation equivalence with the unsalted plan."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from spider_spark.operators.skew import salted_agg, salted_join
+from spider_spark.operators.skew import salted_agg
 
 
 def test_salted_agg_matches_plain(cat):
@@ -32,15 +32,3 @@ def test_salted_agg_matches_plain(cat):
         ).collect()
     }
     assert plain == salted
-
-
-def test_salted_join_matches_plain(cat):
-    orders = cat.orders.select("o_orderkey", "o_custkey", "o_totalprice")
-    cust = cat.customer.select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment")
-    plain = orders.join(cust, "o_custkey").groupBy("c_mktsegment").count()
-    salted = (
-        salted_join(orders, cust, "o_custkey").groupBy("c_mktsegment").count()
-    )
-    assert {(r.c_mktsegment, r["count"]) for r in plain.collect()} == {
-        (r.c_mktsegment, r["count"]) for r in salted.collect()
-    }

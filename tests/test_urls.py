@@ -7,8 +7,9 @@ the DuckDB cell-for-cell parity is covered by tools/check_correctness.py.
 
 from __future__ import annotations
 
-from spider_spark.plans.explain import formatted_plan, has_cartesian
+from spider_spark.plans.explain import formatted_plan
 from spider_spark.text import urls as U
+from tests.conftest import has_cartesian
 
 
 def _by_id(rows):

@@ -1,8 +1,7 @@
 """DATA-scaling evidence: the same pipelines at 1x / 4x / 16x corpus size.
 
-The core-scaling harness (tools/bench_scaling.py) shows the engine uses
-added parallelism; this one shows runtime grows ~linearly with added DATA
-at fixed parallelism — the claim a 100 TB deployment actually rests on.
+Runtime should grow ~linearly with added DATA at fixed parallelism — the
+claim a 100 TB deployment actually rests on.
 One superlinear stage (an O(n^2) candidate explode, an AQE broadcast that
 flips to SMJ past a size threshold, a cache that stops fitting) shows up
 here as t(16x)/t(4x) >> 4 long before it shows up in production.
