@@ -92,7 +92,6 @@ def pair_explode(
     id_field: str | None = None,
     payload_fields: tuple[str, ...] = (),
     cap: int = MAX_POSTING_LEN,
-    observation=None,
 ) -> DataFrame:
     """(doc_id_1 < doc_id_2) pairs from per-key id lists (column ``ids``), one row per
     co-occurrence. One shuffle (the groupBy that built the lists) instead
@@ -113,8 +112,7 @@ def pair_explode(
     single task, and the collect_list array OOMs the executor before the
     explode even starts. This is the standard df-cap from suffix-array /
     MinHash dedup practice; pass ``cap=None`` to disable (oracle paths at
-    test scale). Pass a ``pyspark.sql.Observation`` to count dropped
-    keys (``n_dropped_keys``) after the next action.
+    test scale).
     """
     ids = F.array_sort(F.col("ids"))
 
@@ -137,13 +135,6 @@ def pair_explode(
         )
     )
     size = F.size(F.col("ids"))
-    if observation is not None:
-        grouped_ids = grouped_ids.observe(
-            observation,
-            F.sum(
-                (size > (cap if cap is not None else (1 << 31))).cast("long")
-            ).alias("n_dropped_keys"),
-        )
     keep = (size > 1) if cap is None else size.between(2, cap)
     # The explode amplifies each key row ~f²/2-fold, but AQE sizes the
     # upstream stage on the PRE-explode bytes and happily coalesces the
@@ -167,7 +158,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
     cap: int | None = MAX_POSTING_LEN,
-    observation=None,
 ) -> DataFrame:
     """All doc pairs with shingle-set Jaccard ≥ threshold (exact up to
     the df-cap: postings longer than ``cap`` are dropped — see
@@ -188,7 +178,6 @@ def ngram_jaccard_pairs(
         id_field="doc_id",
         payload_fields=("n_sh",),
         cap=cap,
-        observation=observation,
     )
     common = cand.groupBy("doc_id_1", "doc_id_2").agg(
         F.count("*").alias("common"),

@@ -139,20 +139,18 @@ def band_postings(sig: DataFrame, bands: int = BANDS) -> DataFrame:
 def lsh_candidate_pairs(
     sig: DataFrame,
     cap: int | None = MAX_BUCKET_LEN,
-    observation=None,
 ) -> DataFrame:
     """Distinct candidate (doc_id_1 < doc_id_2) pairs sharing ≥1 band."""
     from spider_spark.dedup.jaccard import pair_explode
 
     banded = band_postings(sig)
     grouped = banded.groupBy("band", "bh").agg(F.collect_list("doc_id").alias("ids"))
-    return pair_explode(grouped, cap=cap, observation=observation).distinct()
+    return pair_explode(grouped, cap=cap).distinct()
 
 
 def lsh_candidates_est(
     docs: DataFrame,
     cap: int | None = MAX_BUCKET_LEN,
-    observation=None,
 ) -> DataFrame:
     """ALL LSH candidate pairs annotated with the signature-estimated
     Jaccard (no threshold): (doc_id_1 < doc_id_2, est_jaccard). This is
@@ -161,7 +159,7 @@ def lsh_candidates_est(
     from it with a narrow filter/join."""
     sig = minhash_signatures(docs).cache()
     sig.count()  # materialise once: three downstream branches reuse it
-    cand = lsh_candidate_pairs(sig, cap=cap, observation=observation)
+    cand = lsh_candidate_pairs(sig, cap=cap)
     return estimate_jaccard(cand, sig)
 
 
@@ -185,10 +183,9 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     est_threshold: float = EST_THRESHOLD,
     cap: int | None = MAX_BUCKET_LEN,
-    observation=None,
 ) -> DataFrame:
     """Candidate pairs with signature-estimated Jaccard ≥ est_threshold."""
-    return lsh_candidates_est(docs, cap=cap, observation=observation).filter(
+    return lsh_candidates_est(docs, cap=cap).filter(
         F.col("est_jaccard") >= est_threshold
     )
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
 from spider_spark.dedup.jaccard import ngram_jaccard_pairs
+from spider_spark.session import rows_if_small
 
 MAX_ITERS = 20
 # Fixed-iteration constants, shared with the DuckDB mirrors in
@@ -65,38 +66,38 @@ def _union_find_components(rows) -> list[tuple[int, int]]:
     return [(v, find(v)) for v in parent]
 
 
-def connected_components(
-    edges: DataFrame,
-    small_graph_edges: int | None = SMALL_CC_EDGES,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) where component = min node id reachable.
 
-    Min-label propagation: every round each node takes the min of its
-    own label and its neighbours' labels; stop when no label changes.
-    Small aggregated graphs short-circuit to a driver-side union-find
-    (see SMALL_CC_EDGES) with bit-identical output.
+    Graphs of at most SMALL_CC_EDGES edges run a driver-side union-find
+    with bit-identical output; larger ones run connected_components_loop.
     """
-    # cache the bidirectional edge list: every propagation round joins
-    # against it, and the upstream may be an expensive pipeline (e.g. the
+    # cache: the count and the collect (or the loop) read the edges
+    # again, and the upstream may be an expensive pipeline (e.g. the
     # full n-gram Jaccard near-dup computation)
+    edges = edges.selectExpr("src", "dst").cache()
+    rows = rows_if_small(edges, SMALL_CC_EDGES)
+    if rows is None:
+        out = connected_components_loop(edges)
+    else:
+        out = edges.sparkSession.createDataFrame(
+            _union_find_components(rows), schema="node bigint, component bigint"
+        )
+    edges.unpersist()
+    return out
+
+
+def connected_components_loop(edges: DataFrame) -> DataFrame:
+    """The distributed connected_components: min-label propagation.
+    Every round each node takes the min of its own label and its
+    neighbours' labels; stop when no label changes."""
+    # cache the bidirectional edge list: every propagation round joins
+    # against it
     bidir = (
         edges.selectExpr("src", "dst")
         .union(edges.selectExpr("dst AS src", "src AS dst"))
         .cache()
     )
-    if small_graph_edges:
-        # the count materialises the cache — the first loop round would
-        # pay this same scan anyway
-        if bidir.count() <= 2 * small_graph_edges:
-            # bounded: the count() gate above caps this collect
-            out = _union_find_components(
-                (r.src, r.dst) for r in bidir.collect()
-            )
-            spark = edges.sparkSession
-            bidir.unpersist()
-            return spark.createDataFrame(
-                out, schema="node bigint, component bigint"
-            )
     nodes = bidir.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("component", F.col("node")).cache()
     # Convergence probe: labels are non-increasing under min-propagation,
@@ -403,49 +404,32 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS over the distinct host-level link graph (self-loops
     dropped) — the link-spam / mirror-detection companion to
     host_pagerank."""
-    from spider_spark.text.links import host_graph_stats
+    from spider_spark.text.links import host_edges
 
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
-    )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
-    return hits(edges).select(
+    return hits(host_edges(spark, sf_dir)).select(
         F.col("node").alias("domain"),
         F.round("hub", 4).alias("hub"),
         F.round("auth", 4).alias("auth"),
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    small_graph_edges: int | None = SMALL_CC_EDGES,
-) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Community detection by synchronous label propagation: each round
     every node adopts the most frequent label among its neighbours
     (ties -> smallest label, so the algorithm is deterministic —
     classic LPA tie-breaks randomly, which would be untestable).
 
-    Each round is one shuffle keyed on the receiving node (edge join +
-    count + max_by), lineage truncated per round — the same bounded-
-    round iterative-join shape as CC/PageRank/HITS. Fixed iteration
-    count; oscillation (possible under synchronous updates on bipartite
-    structures) is bounded by it."""
-    bidir = (
-        edges.selectExpr("src", "dst")
-        .union(edges.selectExpr("dst AS src", "src AS dst"))
-        .distinct()
-        .cache()
-    )
-    if small_graph_edges and bidir.count() <= 2 * small_graph_edges:
-        # driver-side twin of the synchronous loop below — identical
-        # votes, identical min-label tie-break (same rationale as
-        # SMALL_CC_EDGES: per-round scheduling latency dominates tiny
-        # aggregated graphs)
+    Graphs of at most 2 × SMALL_CC_EDGES distinct directed edges, both
+    directions counted, run a driver-side twin with identical votes and
+    tie-break (same rationale as SMALL_CC_EDGES); larger ones run
+    label_propagation_loop."""
+    bidir = undirected(edges).cache()
+    rows = rows_if_small(bidir, 2 * SMALL_CC_EDGES)
+    if rows is None:
+        out = label_propagation_loop(bidir)
+    else:
         adj: dict[int, list[int]] = {}
-        # bounded: the count() gate above caps this collect
-        for r in bidir.collect():
+        for r in rows:
             adj.setdefault(r.src, []).append(r.dst)
         lab = {v: v for v in adj}
         for _ in range(LPA_ITERS):
@@ -457,11 +441,30 @@ def label_propagation(
                 best_n = max(counts.values())
                 new[v] = min(l for l, n in counts.items() if n == best_n)
             lab = new
-        spark = edges.sparkSession
-        bidir.unpersist()
-        return spark.createDataFrame(
+        out = edges.sparkSession.createDataFrame(
             list(lab.items()), schema="node bigint, label bigint"
         )
+    bidir.unpersist()
+    return out
+
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """Distinct (src, dst) edges in both directions: the graph
+    label_propagation votes over."""
+    return (
+        edges.selectExpr("src", "dst")
+        .union(edges.selectExpr("dst AS src", "src AS dst"))
+        .distinct()
+    )
+
+
+def label_propagation_loop(bidir: DataFrame) -> DataFrame:
+    """The distributed label_propagation over ``undirected(edges)``.
+    Each round is one shuffle keyed on the receiving node (edge join +
+    count + max_by), lineage truncated per round — the same bounded-
+    round iterative-join shape as CC/PageRank/HITS. Fixed iteration
+    count; oscillation (possible under synchronous updates on bipartite
+    structures) is bounded by it."""
     labels = (
         bidir.select(F.col("src").alias("node"))
         .distinct()
@@ -487,7 +490,6 @@ def label_propagation(
             )
             .localCheckpoint()
         )
-    bidir.unpersist()
     return labels
 
 

@@ -31,6 +31,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spider_spark.session import rows_if_small
+
 M_REGS = 64  # 2^6 registers — ±13% std err, plenty for centrality ranks
 _ALPHA = 0.709  # standard HLL alpha for m=64
 MAX_ROUNDS = 12
@@ -153,47 +155,42 @@ def _twin_estimates(edge_list):
         prev_probe = probe
 
 
-def hyperball_harmonic(
-    edges: DataFrame,
-    small_graph_edges: int | None = SMALL_BALL_EDGES,
-) -> DataFrame:
+def hyperball_harmonic(edges: DataFrame) -> DataFrame:
     """(node, harmonic, reach_est) over directed edges (src, dst):
     classic harmonic centrality of each node v = Σ_{u reaches v} 1/d(u,v).
-    The ball expansion runs along REVERSED edges (v's sketch absorbs its
-    in-neighbors' sketches), so after r rounds v's sketch estimates
-    |{u : d(u,v) ≤ r}| and the per-round deltas weighted 1/r telescope
-    into the harmonic sum. reach_est is the final in-ball cardinality
-    (how much of the graph can reach v at all). Small aggregated graphs
-    short-circuit to the exact driver twin (SMALL_BALL_EDGES)."""
-    if small_graph_edges:
-        e = edges.select("src", "dst").distinct()
-        # bounded: the count gate caps the collect
-        if e.count() <= small_graph_edges:
-            edge_list = [(r.src, r.dst) for r in e.collect()]
-            h: dict = {}
-            prev: dict = {}
-            for r, est in _twin_estimates(edge_list):
-                if r == 0:
-                    h = {n: 0.0 for n in est}
-                else:
-                    h = {
-                        n: h[n] + max(est[n] - prev[n], 0.0) / float(r)
-                        for n in est
-                    }
-                prev = est
-            rows = [(n, h[n], prev[n]) for n in sorted(h)]
-            node_t = (
-                "bigint" if rows and not isinstance(rows[0][0], str) else "string"
-            )
-            # round IN Spark: F.round is HALF_UP, python round is
-            # banker's — the twin must use the identical rounding fn
-            return edges.sparkSession.createDataFrame(
-                rows, f"node {node_t}, h double, prev double"
-            ).select(
-                "node",
-                F.round("h", 4).alias("harmonic"),
-                F.round("prev", 2).alias("reach_est"),
-            )
+    Graphs of at most SMALL_BALL_EDGES distinct edges run the exact
+    driver twin; larger ones run hyperball_harmonic_loop."""
+    rows = rows_if_small(edges.select("src", "dst").distinct(), SMALL_BALL_EDGES)
+    if rows is None:
+        return hyperball_harmonic_loop(edges)
+    h: dict = {}
+    prev: dict = {}
+    for r, est in _twin_estimates(rows):
+        if r == 0:
+            h = {n: 0.0 for n in est}
+        else:
+            h = {n: h[n] + max(est[n] - prev[n], 0.0) / float(r) for n in est}
+        prev = est
+    out = [(n, h[n], prev[n]) for n in sorted(h)]
+    node_t = "bigint" if out and not isinstance(out[0][0], str) else "string"
+    # round IN Spark: F.round is HALF_UP, python round is banker's — the
+    # twin must use the identical rounding fn
+    return edges.sparkSession.createDataFrame(
+        out, f"node {node_t}, h double, prev double"
+    ).select(
+        "node",
+        F.round("h", 4).alias("harmonic"),
+        F.round("prev", 2).alias("reach_est"),
+    )
+
+
+def hyperball_harmonic_loop(edges: DataFrame) -> DataFrame:
+    """The distributed hyperball_harmonic. The ball expansion runs along
+    REVERSED edges (v's sketch absorbs its in-neighbors' sketches), so
+    after r rounds v's sketch estimates |{u : d(u,v) ≤ r}| and the
+    per-round deltas weighted 1/r telescope into the harmonic sum.
+    reach_est is the final in-ball cardinality (how much of the graph
+    can reach v at all)."""
     harmonic = None
     for r, regs in _ball_rounds(edges):
         if r == 0:
@@ -266,42 +263,49 @@ def host_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     measurement): per radius r, the estimated number of reachable
     (u, v) pairs with d(u,v) ≤ r, the round's new-pair share, and the
     cumulative fraction of the final reachable-pair count. The smallest
-    r with cum_frac ≥ 0.9 is the effective diameter."""
-    from spider_spark.text.links import host_graph_stats
+    r with cum_frac ≥ 0.9 is the effective diameter.
 
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
+    Host graphs of at most SMALL_BALL_EDGES edges run the driver twin
+    (the per-round Spark jobs are pure scheduling floor at host-graph
+    sizes); larger ones run distance_distribution_loop. est values are
+    identical (exact-replica estimator); the per-round total is a float
+    sum whose order differs from F.sum's, but outputs round to 2/4 dp
+    (twin == distributed asserted in tests)."""
+    from spider_spark.text.links import host_edges
+
+    edges = host_edges(spark, sf_dir)
+    rows = rows_if_small(edges, SMALL_BALL_EDGES)
+    if rows is None:
+        return distance_distribution_loop(edges)
+    return _neighbourhood_function(
+        spark,
+        [(r, sum(est[n] for n in sorted(est))) for r, est in _twin_estimates(rows)],
     )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
-    totals: list[tuple[int, float]] = []
-    n_edges = edges.count()
-    if n_edges <= SMALL_BALL_EDGES:
-        # same driver twin as hyperball_harmonic: the per-round Spark
-        # jobs are pure scheduling floor at host-graph sizes. est values
-        # are identical (exact-replica estimator); the per-round total
-        # is a float sum whose order differs from F.sum's, but outputs
-        # round to 2/4 dp (twin == distributed asserted in tests).
-        # bounded: n_edges <= SMALL_BALL_EDGES by the gate above
-        edge_list = [(r.src, r.dst) for r in edges.collect()]
-        for r, est in _twin_estimates(edge_list):
-            totals.append((r, sum(est[n] for n in sorted(est))))
-    else:
-        for r, regs in _ball_rounds(edges):
-            n_r = _estimate(regs).agg(F.sum("est")).first()[0]
-            totals.append((r, float(n_r)))
+
+
+def distance_distribution_loop(edges: DataFrame) -> DataFrame:
+    """The distributed host_distance_distribution over ``edges``: one
+    F.sum of the per-node estimates per HyperBall round."""
+    totals = [
+        (r, float(_estimate(regs).agg(F.sum("est")).first()[0]))
+        for r, regs in _ball_rounds(edges)
+    ]
+    return _neighbourhood_function(edges.sparkSession, totals)
+
+
+def _neighbourhood_function(spark: SparkSession, totals) -> DataFrame:
+    """(radius, pairs_est, new_pairs, cum_frac) from per-radius
+    reachable-pair totals [(r, N(r))], r = 0, 1, ..."""
     final = totals[-1][1]
-    rows = []
-    for (r, n_r), (_, n_prev) in zip(totals[1:], totals[:-1]):
-        rows.append(
-            (
-                r,
-                round(n_r, 2),
-                round(max(n_r - n_prev, 0.0), 2),
-                round(n_r / final, 4),
-            )
+    rows = [
+        (
+            r,
+            round(n_r, 2),
+            round(max(n_r - n_prev, 0.0), 2),
+            round(n_r / final, 4),
         )
+        for (r, n_r), (_, n_prev) in zip(totals[1:], totals[:-1])
+    ]
     return spark.createDataFrame(
         rows, "radius bigint, pairs_est double, new_pairs double, cum_frac double"
     )
@@ -310,14 +314,8 @@ def host_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def host_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() wrapper: HyperBall harmonic centrality of every host in
     the crawl link graph (self-loops dropped)."""
-    from spider_spark.text.links import host_graph_stats
+    from spider_spark.text.links import host_edges
 
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
-    )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
-    return hyperball_harmonic(edges).select(
+    return hyperball_harmonic(host_edges(spark, sf_dir)).select(
         F.col("node").alias("host"), "harmonic", "reach_est"
     )

@@ -102,3 +102,16 @@ def ensure_parallelism(df, bytes_per_task: int = 64 << 10):
     if want > 1 and df.rdd.getNumPartitions() < want:
         return df.repartition(want)
     return df
+
+
+def rows_if_small(df, limit: int):
+    """The rows of ``df`` if it holds at most ``limit`` of them, else
+    None: the size gate in front of every driver twin (a twin replays a
+    distributed loop on the driver when the input is small enough that
+    per-round scheduling latency, not data, would set the loop's cost).
+    Two jobs, a count and a collect; cache ``df`` first when its
+    upstream is costly."""
+    if df.count() > limit:
+        return None
+    # bounded: the count above caps this collect
+    return df.collect()

@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spider_spark import store
 from spider_spark.similarity import ivf as _ivf
 from spider_spark.similarity import pq as _pq
 
@@ -129,36 +130,19 @@ def ann_pq_topk_prebuilt(
     return _pq.adc_search(queries, candidates, books, codes)
 
 
-def _index_base(sf_dir: str) -> str:
-    """Cache key for the per-sf /tmp index: sf name + source-table
-    mtime, so a regenerated embeddings table can never be served from a
-    stale index."""
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        stamp = str(int(os.path.getmtime(src)))
-    except OSError:
-        stamp = "0"
-    return os.path.join(
-        "/tmp",
-        "spider_spark_indexes",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{stamp}",
-    )
-
-
 def ann_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() wrapper exercising the persistence path end-to-end:
-    build the IVF index once per sf_dir under /tmp (skipped when already
-    on disk — the reuse that makes repeated query batches cheap), then
-    serve the standard query batch from the stored index. Deterministic
-    training means the answers equal ann_ivf_topk's (tested)."""
+    build the IVF index once per embeddings snapshot (keyed like every
+    store artifact; skipped when already on disk — the reuse that makes
+    repeated query batches cheap), then serve the standard query batch
+    from the stored index. Deterministic training means the answers
+    equal ann_ivf_topk's (tested)."""
     import os
 
     from spider_spark.catalog import Catalog
 
     emb = Catalog(spark, sf_dir).embeddings
-    path = f"{_index_base(sf_dir)}/ivf"
+    path = store.snapshot_path(sf_dir, "ivf", 1, "embeddings")
     if not os.path.exists(f"{path}/lists/_SUCCESS"):
         save_ivf_index(emb.filter(F.col("vec_id") >= _ivf.N_QUERIES), path)
     return ann_ivf_topk_prebuilt(emb.filter(F.col("vec_id") < _ivf.N_QUERIES), path)
@@ -173,7 +157,7 @@ def ann_pq_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = Catalog(spark, sf_dir).embeddings
     cand = emb.filter(F.col("vec_id") >= _pq.N_QUERIES)
-    path = f"{_index_base(sf_dir)}/pq"
+    path = store.snapshot_path(sf_dir, "pq", 1, "embeddings")
     if not os.path.exists(f"{path}/codes/_SUCCESS"):
         save_pq_index(cand, path)
     return ann_pq_topk_prebuilt(

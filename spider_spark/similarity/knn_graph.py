@@ -171,11 +171,10 @@ def materialized_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Twin gate: below this many candidate vectors the 4-hop join loop is
+# Twin gate: up to this many candidate vectors the 4-hop join loop is
 # pure driver-round scheduling floor and the exact-replica driver twin
-# serves instead (the HyperBall/BPE twin pattern; equivalence pinned in
-# tests/test_knn_graph.py). The data-scaling harness and the twin test
-# force the distributed path with small_twin_nodes=None.
+# serves instead (the HyperBall/BPE twin pattern; equivalence with
+# knn_graph_search_loop pinned in tests/test_knn_graph.py).
 SMALL_SEARCH_NODES = 20_000
 
 
@@ -225,7 +224,7 @@ def _search_twin(
         proj = np.cumsum(v[None, :] * P, axis=1)[:, -1]
         return int(((proj > 0) * weights).sum())
 
-    # bounded: gated by small_twin_nodes in knn_graph_search
+    # bounded: gated by SMALL_SEARCH_NODES in knn_graph_search
     crows = candidates.select(
         "vec_id", "embedding", F.xxhash64("vec_id").alias("h")
     ).collect()
@@ -289,26 +288,31 @@ def knn_graph_search(
     queries: DataFrame,
     graph: DataFrame,
     candidates: DataFrame,
-    small_twin_nodes: int | None = SMALL_SEARCH_NODES,
 ) -> DataFrame:
     """(q_id, neighbor_id, cos, rank) — best-first beam search over the
-    stored adjacency. All query beams advance together: each hop picks
-    every query's best BEAM not-yet-expanded pool nodes, expands
-    them with ONE adjacency join, scores the unseen neighbors, and
-    feeds them back into the pool; the final top-k ranks everything
-    visited. Entry points are the N_ENTRY global hash-ranked nodes
-    (deterministic) PLUS up to N_BUCKET_ENTRY co-members of the QUERY's
-    LSH bucket — the query-aware warm start that lands the walk in the
-    right region of space (the role HNSW's upper layers play).
-
-    Below ``small_twin_nodes`` candidates the exact-replica driver twin
-    serves the search (the per-hop Spark jobs are pure scheduling floor
-    at that size; twin == distributed asserted in tests). Pass ``None``
-    to force the distributed path."""
-    from spider_spark.similarity.lsh import bucket_id
-
-    if small_twin_nodes is not None and candidates.count() <= small_twin_nodes:
+    stored adjacency. At most SMALL_SEARCH_NODES candidates the
+    exact-replica driver twin serves the search (the per-hop Spark jobs
+    are pure scheduling floor at that size); above it
+    knn_graph_search_loop runs."""
+    if candidates.count() <= SMALL_SEARCH_NODES:
         return _search_twin(queries, graph, candidates)
+    return knn_graph_search_loop(queries, graph, candidates)
+
+
+def knn_graph_search_loop(
+    queries: DataFrame,
+    graph: DataFrame,
+    candidates: DataFrame,
+) -> DataFrame:
+    """The distributed knn_graph_search. All query beams advance
+    together: each hop picks every query's best BEAM not-yet-expanded
+    pool nodes, expands them with ONE adjacency join, scores the unseen
+    neighbors, and feeds them back into the pool; the final top-k ranks
+    everything visited. Entry points are the N_ENTRY global hash-ranked
+    nodes (deterministic) PLUS up to N_BUCKET_ENTRY co-members of the
+    QUERY's LSH bucket — the query-aware warm start that lands the walk
+    in the right region of space (the role HNSW's upper layers play)."""
+    from spider_spark.similarity.lsh import bucket_id
 
     cvecs = with_normed(candidates).select(
         F.col("vec_id").alias("node"), F.col("_v").alias("cv"), F.col("_norm").alias("cn")

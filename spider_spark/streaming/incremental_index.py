@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from spider_spark.dedup.minhash import (
     band_postings,
     estimate_jaccard,
+    lsh_candidate_pairs,
     minhash_signatures,
 )
 
@@ -69,17 +70,13 @@ def _p(state_path: str, name: str) -> str:
 
 def init_state(spark: SparkSession, state_path: str, base_docs: DataFrame) -> None:
     """Bootstrap the state from the existing corpus: signatures,
-    postings, and the full candidate relation of ``base_docs``."""
-    from spider_spark.dedup.jaccard import pair_explode
-
+    postings, and the full (uncapped) candidate relation of
+    ``base_docs``."""
     sig = minhash_signatures(base_docs)
     sig.write.mode("overwrite").parquet(_p(state_path, "signatures"))
     sig = spark.read.schema(SIG_SCHEMA).parquet(_p(state_path, "signatures"))
-    post = band_postings(sig)
-    post.write.mode("overwrite").parquet(_p(state_path, "postings"))
-    post = spark.read.schema(POSTINGS_SCHEMA).parquet(_p(state_path, "postings"))
-    grouped = post.groupBy("band", "bh").agg(F.collect_list("doc_id").alias("ids"))
-    pairs = pair_explode(grouped, cap=None).distinct()
+    band_postings(sig).write.mode("overwrite").parquet(_p(state_path, "postings"))
+    pairs = lsh_candidate_pairs(sig, cap=None)
     estimate_jaccard(pairs, sig).write.mode("overwrite").parquet(
         _p(state_path, "candidates")
     )

@@ -25,7 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
-from spider_spark.graph.algorithms import pagerank
+from spider_spark.graph.algorithms import SMALL_CC_EDGES, pagerank
+from spider_spark.session import rows_if_small
 
 N_LINKS = 3
 TARGET_MOD = 500
@@ -160,6 +161,16 @@ def anchor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct directed host edges (src, dst), self-loops dropped."""
+    links = host_graph_stats(spark, sf_dir).filter(
+        F.col("src_domain") != F.col("dst_domain")
+    )
+    return links.select(
+        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
+    ).distinct()
+
+
 def undirected_host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected host edges (a < b, self-loops dropped)."""
     links = host_graph_stats(spark, sf_dir).filter(
@@ -195,13 +206,7 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped). Oracle-checked: the fixed-iteration loop is unrolled into
     a materialized CTE chain on the DuckDB side; rank-mass and ordering
     invariants are additionally asserted in tests/."""
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
-    )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
-    return pagerank(edges).select(
+    return pagerank(host_edges(spark, sf_dir)).select(
         F.col("node").alias("domain"), F.round("rank", 4).alias("rank")
     )
 
@@ -219,13 +224,7 @@ def host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checked via the unrolled fixed-iteration CTE chain."""
     from spider_spark.graph.algorithms import trustrank
 
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
-    )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
-    return trustrank(edges, TRUST_SEEDS).select(
+    return trustrank(host_edges(spark, sf_dir), TRUST_SEEDS).select(
         F.col("node").alias("domain"), F.round("rank", 4).alias("trust")
     )
 
@@ -284,33 +283,24 @@ def link_farm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 MAX_BFS_ROUNDS = 16
 
 
-def bfs_depths(
-    edges: DataFrame, seed: str, small_graph_edges: int | None = None
-) -> DataFrame:
+def bfs_depths(edges: DataFrame, seed: str) -> DataFrame:
     """(host, depth) shortest hop distance from ``seed`` over directed
     edges (src, dst); unreachable hosts get depth -1.
 
-    Iterative min-distance relaxation: each round joins the current
-    depth table to the edge list (keyed on src) and folds the relaxed
-    candidates back with a min-agg — rounds = graph diameter (host
-    graphs are shallow), each round one keyed shuffle, lineage
-    truncated by eager localCheckpoint like the CC loop. Small
-    aggregated edge lists short-circuit to a driver-side BFS with
-    identical output (same rationale as connected_components'
-    SMALL_CC_EDGES: each relaxation round costs ~0.5 s of scheduling
-    latency regardless of data size)."""
-    from spider_spark.graph.algorithms import SMALL_CC_EDGES
+    Edge lists of at most SMALL_CC_EDGES rows run a driver-side BFS with
+    identical output (same rationale as connected_components: each
+    relaxation round costs ~0.5 s of scheduling latency regardless of
+    data size); larger ones run bfs_depths_loop."""
+    from collections import deque
 
-    if small_graph_edges is None:
-        small_graph_edges = SMALL_CC_EDGES
     edges = edges.cache()
-    if small_graph_edges and edges.count() <= small_graph_edges:
-        from collections import deque
-
+    rows = rows_if_small(edges, SMALL_CC_EDGES)
+    if rows is None:
+        out = bfs_depths_loop(edges, seed)
+    else:
         adj: dict[str, list[str]] = {}
         nodes: set[str] = set()
-        # bounded: the count() gate above caps this collect
-        for r in edges.collect():
+        for r in rows:
             adj.setdefault(r.src, []).append(r.dst)
             nodes.add(r.src)
             nodes.add(r.dst)
@@ -322,10 +312,20 @@ def bfs_depths(
                 if v not in depth:
                     depth[v] = depth[u] + 1
                     q.append(v)
-        out = [(v, depth.get(v, -1)) for v in nodes]
-        spark = edges.sparkSession
-        edges.unpersist()
-        return spark.createDataFrame(out, schema="host string, depth bigint")
+        out = edges.sparkSession.createDataFrame(
+            [(v, depth.get(v, -1)) for v in nodes], schema="host string, depth bigint"
+        )
+    edges.unpersist()
+    return out
+
+
+def bfs_depths_loop(edges: DataFrame, seed: str) -> DataFrame:
+    """The distributed bfs_depths: iterative min-distance relaxation.
+    Each round joins the current depth table to the edge list (keyed on
+    src) and folds the relaxed candidates back with a min-agg — rounds =
+    graph diameter (host graphs are shallow), each round one keyed
+    shuffle, lineage truncated by eager localCheckpoint like the CC
+    loop."""
     hosts = (
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
+from spider_spark.session import rows_if_small
 
 VOCAB_V = 32  # toy vocabulary size; unk id == VOCAB_V
 TOK_WINDOW = 32  # chunk window, in tokens
@@ -160,6 +161,7 @@ def _apply_merge(sym, left: str, right: str):
 
 
 SMALL_BPE_VOCAB = 65_536  # distinct words; twin gate (cf. SMALL_CC_EDGES)
+MERGES_SCHEMA = "rank bigint, left string, right string, merged string, pair_count bigint"
 
 
 def _bpe_train_inmem(words: list[tuple[str, int]], n_merges: int):
@@ -207,11 +209,7 @@ def _adjacent_pairs(sym):
     )
 
 
-def bpe_train_merges(
-    docs: DataFrame,
-    n_merges: int = N_MERGES,
-    small_vocab_words: int | None = SMALL_BPE_VOCAB,
-) -> DataFrame:
+def bpe_train_merges(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """Train the first ``n_merges`` BPE merge rules on the corpus
     (Sennrich et al., "Neural Machine Translation of Rare Words with
     Subword Units"): repeatedly count adjacent symbol pairs over the
@@ -224,36 +222,49 @@ def bpe_train_merges(
         before any iteration (at 100 TB that is the difference between
         re-scanning petabytes per merge and iterating over a few 10^7
         rows);
-      - when that word table fits under SMALL_BPE_VOCAB it is collected
-        ONCE and the merge loop runs in memory (the small-graph driver-
-        twin pattern: per-merge Spark-job scheduling latency — seconds ×
-        a 32k-merge production vocab — dominates sub-gate tables; the
-        twin is property-tested bit-identical to the distributed loop);
-      - above the gate, each round is a DELTA pair-count update: only
-        words containing the merged pair are re-segmented and re-counted
-        (retract old pairs, add new), against a persistent pair-count
-        relation — the full vocabulary is scanned once at init, not once
-        per merge. A 1-row bounded argmax picks the rule (metadata);
-        lineage is truncated per round (localCheckpoint) like CC.
+      - when that word table holds at most SMALL_BPE_VOCAB words it is
+        collected ONCE and the merge loop runs in memory (the small-graph
+        driver-twin pattern: per-merge Spark-job scheduling latency —
+        seconds × a 32k-merge production vocab — dominates sub-gate
+        tables; the twin is property-tested bit-identical to the
+        distributed loop);
+      - above the gate, bpe_train_merges_loop runs.
 
     Returns (rank, left, right, merged, pair_count) — the merge table a
     tokenizer ships. Iterative + driver argmax ⇒ rows-only driver
     check; behavior pinned on a hand-built corpus in tests.
     """
-    spark = docs.sparkSession
-    schema = "rank bigint, left string, right string, merged string, pair_count bigint"
+    vocab = word_freqs(docs).cache()
+    rows = rows_if_small(vocab, SMALL_BPE_VOCAB)
+    if rows is None:
+        return bpe_train_merges_loop(vocab, n_merges)
+    vocab.unpersist()
+    words = [(r.word, int(r.freq)) for r in rows]
+    return docs.sparkSession.createDataFrame(
+        _bpe_train_inmem(words, n_merges), MERGES_SCHEMA
+    )
+
+
+def word_freqs(docs: DataFrame) -> DataFrame:
+    """(word, freq): the whitespace-token frequency table BPE trains on."""
     toks = F.split(F.trim("text"), r"\s+")
-    vocab = (
+    return (
         docs.filter(F.col("text").isNotNull())
         .select(F.explode(toks).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
-    ).cache()
-    if small_vocab_words and vocab.count() <= small_vocab_words:
-        # bounded: the count() gate above caps this collect
-        words = [(r.word, int(r.freq)) for r in vocab.collect()]
-        vocab.unpersist()
-        return spark.createDataFrame(_bpe_train_inmem(words, n_merges), schema)
+    )
+
+
+def bpe_train_merges_loop(vocab: DataFrame, n_merges: int) -> DataFrame:
+    """The distributed bpe_train_merges over ``word_freqs(docs)``. Each
+    round is a DELTA pair-count update: only words containing the
+    merged pair are re-segmented and re-counted (retract old pairs, add
+    new), against a persistent pair-count relation — the full
+    vocabulary is scanned once at init, not once per merge. A 1-row
+    bounded argmax picks the rule (metadata); lineage is truncated per
+    round (localCheckpoint) like CC. Unpersists ``vocab`` once it is
+    checkpointed as symbol arrays."""
     # char split: substring(word, i, 1) for i in 1..len
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
@@ -306,7 +317,7 @@ def bpe_train_merges(
         syms = flagged.filter(~F.col("hit")).select("freq", "sym").unionByName(
             affected
         ).localCheckpoint()
-    return spark.createDataFrame(merges, schema)
+    return vocab.sparkSession.createDataFrame(merges, MERGES_SCHEMA)
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

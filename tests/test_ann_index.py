@@ -82,3 +82,35 @@ def test_pq_index_roundtrip(spark, frames, tmp_path_factory):
     inline = _rows(ann_pq_topk_frames(queries, candidates))
     prebuilt = _rows(ann_pq_topk_prebuilt(queries, candidates, path))
     assert prebuilt == inline
+
+
+def test_embeddings_regenerated_within_a_second_get_a_fresh_index(
+    spark, tmp_path, monkeypatch
+):
+    """An embeddings table rewritten with the same mtime to the
+    nanosecond but a new size must not be served the IVF/PQ index of its
+    previous contents; the indexes live under the store's cache root."""
+    import os
+
+    import spider_spark.similarity.index_store as ix
+    import spider_spark.store as store
+
+    root = str(tmp_path / "idx")
+    monkeypatch.setattr(store, "CACHE_ROOT", root)
+    built = []
+    monkeypatch.setattr(ix, "save_ivf_index", lambda cand, path: built.append(path))
+    monkeypatch.setattr(ix, "save_pq_index", lambda cand, path: built.append(path))
+    monkeypatch.setattr(ix, "ann_ivf_topk_prebuilt", lambda q, path: None)
+    monkeypatch.setattr(ix, "ann_pq_topk_prebuilt", lambda q, c, path: None)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "embeddings.parquet"
+    sec = 1_700_000_000 * 10**9
+    for data in (b"v1", b"v22"):
+        src.write_bytes(data)
+        os.utime(src, ns=(sec, sec))
+        ix.ann_ivf_prebuilt_topk(spark, str(sf))
+        ix.ann_pq_prebuilt_topk(spark, str(sf))
+    ivf1, pq1, ivf2, pq2 = built
+    assert ivf1 != ivf2 and pq1 != pq2
+    assert all(p.startswith(root) for p in built)

@@ -143,7 +143,7 @@ def test_label_propagation_two_cliques(spark):
 
 
 def test_cc_small_graph_shortcut_matches_distributed(spark):
-    from spider_spark.graph.algorithms import connected_components
+    from spider_spark.graph.algorithms import connected_components_loop
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (7, 8), (8, 9), (9, 7), (20, 20)],
@@ -152,14 +152,18 @@ def test_cc_small_graph_shortcut_matches_distributed(spark):
     fast = {(r.node, r.component) for r in connected_components(edges).collect()}
     slow = {
         (r.node, r.component)
-        for r in connected_components(edges, small_graph_edges=None).collect()
+        for r in connected_components_loop(edges).collect()
     }
     assert fast == slow
     assert (1, 1) in fast and (4, 1) in fast and (9, 7) in fast
 
 
 def test_lpa_small_graph_shortcut_matches_distributed(spark):
-    from spider_spark.graph.algorithms import label_propagation
+    from spider_spark.graph.algorithms import (
+        label_propagation,
+        label_propagation_loop,
+        undirected,
+    )
 
     # two cliques joined by one bridge edge
     clique = lambda ids: [(a, b) for a in ids for b in ids if a < b]
@@ -170,13 +174,13 @@ def test_lpa_small_graph_shortcut_matches_distributed(spark):
     fast = {(r.node, r.label) for r in label_propagation(edges).collect()}
     slow = {
         (r.node, r.label)
-        for r in label_propagation(edges, small_graph_edges=None).collect()
+        for r in label_propagation_loop(undirected(edges)).collect()
     }
     assert fast == slow
 
 
 def test_bfs_small_graph_shortcut_matches_distributed(spark):
-    from spider_spark.text.links import bfs_depths
+    from spider_spark.text.links import bfs_depths, bfs_depths_loop
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("d", "a")],
@@ -185,7 +189,7 @@ def test_bfs_small_graph_shortcut_matches_distributed(spark):
     fast = {(r.host, r.depth) for r in bfs_depths(edges, "a").collect()}
     slow = {
         (r.host, r.depth)
-        for r in bfs_depths(edges, "a", small_graph_edges=0).collect()
+        for r in bfs_depths_loop(edges, "a").collect()
     }
     assert fast == slow
     assert ("d", 3) in fast and ("x", -1) in fast and ("y", -1) in fast
@@ -196,7 +200,7 @@ def test_cc_twin_equivalence_random_graphs(spark):
     min-label loop produce identical components on random graphs."""
     from hypothesis import given, settings, strategies as st
 
-    from spider_spark.graph.algorithms import connected_components
+    from spider_spark.graph.algorithms import connected_components_loop
 
     edge = st.tuples(st.integers(0, 15), st.integers(0, 15))
 
@@ -209,7 +213,7 @@ def test_cc_twin_equivalence_random_graphs(spark):
         }
         slow = {
             (r.node, r.component)
-            for r in connected_components(df, small_graph_edges=None).collect()
+            for r in connected_components_loop(df).collect()
         }
         assert fast == slow, edges
 

@@ -7,7 +7,7 @@ from collections import deque
 from pyspark.sql import functions as F
 
 from spider_spark.graph.hyperball import host_harmonic_centrality
-from spider_spark.text.links import host_graph_stats
+from spider_spark.text.links import host_edges, host_graph_stats
 
 
 def _exact_harmonic(edges):
@@ -110,28 +110,23 @@ def test_harmonic_driver_twin_equals_distributed(spark, sf_dir):
     distributed loop's output (same md5 register formulas, same
     max-merge, same estimator, same Spark-side rounding) — the same
     twin-equivalence discipline as the union-find/LPA/BFS shortcuts."""
-    from spider_spark.graph.hyperball import hyperball_harmonic
+    from spider_spark.graph.hyperball import hyperball_harmonic, hyperball_harmonic_loop
 
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
-    )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
+    edges = host_edges(spark, sf_dir)
     twin = {
         r.node: (r.harmonic, r.reach_est)
         for r in hyperball_harmonic(edges).collect()
     }
     dist = {
         r.node: (r.harmonic, r.reach_est)
-        for r in hyperball_harmonic(edges, small_graph_edges=None).collect()
+        for r in hyperball_harmonic_loop(edges).collect()
     }
     assert twin == dist and twin
 
 
 def test_harmonic_twin_on_integer_nodes(spark):
     """Twin path also serves bigint node ids (schema branch)."""
-    from spider_spark.graph.hyperball import hyperball_harmonic
+    from spider_spark.graph.hyperball import hyperball_harmonic, hyperball_harmonic_loop
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long"
@@ -139,17 +134,19 @@ def test_harmonic_twin_on_integer_nodes(spark):
     twin = {r.node: r.harmonic for r in hyperball_harmonic(edges).collect()}
     dist = {
         r.node: r.harmonic
-        for r in hyperball_harmonic(edges, small_graph_edges=None).collect()
+        for r in hyperball_harmonic_loop(edges).collect()
     }
     assert twin == dist and set(twin) == {1, 2, 3, 4}
 
 
-def test_distance_distribution_twin_equals_distributed(spark, sf_dir, monkeypatch):
+def test_distance_distribution_twin_equals_distributed(spark, sf_dir):
     import spider_spark.graph.hyperball as hb
 
     twin = [tuple(r) for r in hb.host_distance_distribution(spark, sf_dir).collect()]
-    monkeypatch.setattr(hb, "SMALL_BALL_EDGES", 0)
-    dist = [tuple(r) for r in hb.host_distance_distribution(spark, sf_dir).collect()]
+    dist = [
+        tuple(r)
+        for r in hb.distance_distribution_loop(host_edges(spark, sf_dir)).collect()
+    ]
     # the two paths sum identical per-node estimates in different orders
     # (Python sorted-node left-to-right vs F.sum partition order); the
     # non-dyadic log-branch values make post-rounding equality

@@ -19,6 +19,7 @@ from spider_spark.similarity.knn_graph import (
     M_NEIGHBORS,
     knn_graph_build,
     knn_graph_search,
+    knn_graph_search_loop,
 )
 
 
@@ -122,6 +123,6 @@ def test_search_twin_equals_distributed(built):
     )
     dist = sorted(
         (r.q_id, r.neighbor_id, r.cos, r.rank)
-        for r in knn_graph_search(q, g, c, small_twin_nodes=None).collect()
+        for r in knn_graph_search_loop(q, g, c).collect()
     )
     assert twin == dist and twin

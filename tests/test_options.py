@@ -8,6 +8,11 @@ counts: the scan can miss a knob, never invent one. A parameter counts
 as set when a call passes it by keyword, passes enough positional
 arguments to reach it, or unpacks ``*args``/``**kwargs``.
 
+Twin gates: a driver twin is chosen by input size inside its operator,
+never by a caller. No parameter is named ``small_*`` or defaults to a
+``SMALL_*`` constant, and no test or tool reassigns a ``SMALL_*``
+constant; tests reach a distributed loop by calling its function.
+
 Reachability: every top-level definition is reached from a shipped entry
 point. Names are followed by bare name too, so the scan can miss dead
 code (a same-named definition or attribute elsewhere masks it), never
@@ -87,6 +92,56 @@ def test_every_default_parameter_is_set_by_a_caller():
     assert not unset, (
         f"{len(unset)} default-valued parameters no caller sets "
         "(make each a constant or literal):\n" + "\n".join(unset)
+    )
+
+
+# --- twin gates -------------------------------------------------------------
+
+
+def _names_gate(node) -> bool:
+    """``node`` names a SMALL_* twin gate: NAME, mod.NAME or "mod.NAME"."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        name = node.value.rsplit(".", 1)[-1]
+    else:
+        name = getattr(node, "id", getattr(node, "attr", ""))
+    return name.startswith("SMALL_")
+
+
+def twin_gate_overrides() -> list[str]:
+    out = []
+    for f in sorted(ENGINE.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+            for arg, d in zip(pos + a.kwonlyargs, defaults + a.kw_defaults):
+                if arg.arg.startswith("small_") or _names_gate(d):
+                    out.append(f"{f.relative_to(REPO)}::{node.name}({arg.arg}=)")
+    for rel in ("tests", "tools"):
+        for f in _py_files(rel):
+            for node in ast.walk(ast.parse(f.read_text())):
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    is_setattr = getattr(fn, "attr", getattr(fn, "id", "")) == "setattr"
+                    targets = node.args[:2] if is_setattr else []
+                elif isinstance(node, (ast.Assign, ast.AugAssign)):
+                    targets = getattr(node, "targets", [getattr(node, "target", None)])
+                    targets = [t for t in targets if isinstance(t, ast.Attribute)]
+                else:
+                    continue
+                if any(_names_gate(t) for t in targets):
+                    out.append(f"{f.relative_to(REPO)}:{node.lineno} reassigns a SMALL_* gate")
+    return out
+
+
+def test_no_caller_picks_a_twin_path():
+    found = twin_gate_overrides()
+    assert not found, (
+        f"{len(found)} ways to force a driver twin's path from outside "
+        "(gate on input size inside the operator; tests call the loop "
+        "function directly):\n" + "\n".join(found)
     )
 
 

@@ -382,11 +382,14 @@ def test_bpe_train_classic_corpus(spark):
 
 def test_bpe_twin_matches_distributed_loop(spark, sf_dir):
     """The in-memory twin and the distributed delta-count loop must
-    produce identical merge tables (same rationale as the CC twin).
-    Forces the distributed path with small_vocab_words=0 on both the
-    classic corpus and a real documents sample."""
+    produce identical merge tables (same rationale as the CC twin), on
+    both the classic corpus and a real documents sample."""
     from spider_spark.catalog import Catalog
-    from spider_spark.text.tokenizer import bpe_train_merges
+    from spider_spark.text.tokenizer import (
+        bpe_train_merges,
+        bpe_train_merges_loop,
+        word_freqs,
+    )
 
     classic = spark.createDataFrame(
         [(1, " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6
@@ -397,7 +400,7 @@ def test_bpe_twin_matches_distributed_loop(spark, sf_dir):
     for corpus in (classic, docs_sample):
         twin = [tuple(r) for r in bpe_train_merges(corpus, 6).collect()]
         dist = [tuple(r) for r in
-                bpe_train_merges(corpus, 6, small_vocab_words=0).collect()]
+                bpe_train_merges_loop(word_freqs(corpus), 6).collect()]
         assert twin == dist
         assert len(twin) > 0
 

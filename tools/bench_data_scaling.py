@@ -77,14 +77,9 @@ def amplified_edges(spark, sf_dir: str, k: int):
     """Host link graph x k as k DISJOINT copies (node "h" -> "h#r"):
     distances and diameter are unchanged, so HyperBall's round count is
     constant and cost scales with edge rows alone."""
-    from spider_spark.text.links import host_graph_stats
+    from spider_spark.text.links import host_edges
 
-    links = host_graph_stats(spark, sf_dir).filter(
-        F.col("src_domain") != F.col("dst_domain")
-    )
-    edges = links.select(
-        F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-    ).distinct()
+    edges = host_edges(spark, sf_dir)
     if k == 1:
         return edges
     rep = edges.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(k - 1))))
@@ -123,17 +118,14 @@ def job_sparse_sim(spark, cat: Catalog, k: int):
 
 
 def job_hyperball(spark, cat: Catalog, k: int):
-    """HyperBall harmonic centrality over the k-copy host graph.
-    small_graph_edges=None forces the DISTRIBUTED register loop: this
-    harness measures how the engine's shuffle rounds grow with data,
-    and the driver twin (which the production wrapper rightly serves at
-    these graph sizes) would short-circuit exactly the path under
-    test."""
-    from spider_spark.graph.hyperball import hyperball_harmonic
+    """HyperBall harmonic centrality over the k-copy host graph, on the
+    DISTRIBUTED register loop: this harness measures how the engine's
+    shuffle rounds grow with data, and the driver twin that
+    hyperball_harmonic serves at these graph sizes would skip exactly
+    the path under test."""
+    from spider_spark.graph.hyperball import hyperball_harmonic_loop
 
-    return hyperball_harmonic(
-        amplified_edges(spark, cat.sf_dir, k), small_graph_edges=None
-    )
+    return hyperball_harmonic_loop(amplified_edges(spark, cat.sf_dir, k))
 
 
 def amplified_vectors(cat: Catalog, k: int):
