@@ -17,18 +17,22 @@ is asserted in tests (tests/test_dedup.py).
 
 from __future__ import annotations
 
+import functools
+import zlib
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spider_spark.catalog import Catalog
 from spider_spark.dedup.jaccard import NGRAM
-import zlib
 
 NUM_PERM = 128
 BANDS = 32
 EST_THRESHOLD = 0.4
 
 
+@functools.cache
 def _perm_consts():
     """Deterministic affine constants (odd multiplier, offset) per perm."""
     import hashlib
@@ -44,62 +48,66 @@ def _perm_consts():
     return a, b
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig: array<bigint>[NUM_PERM]) — fully narrow, NO shuffle.
-
-    Shingles are a per-document set, so the signature never needs an
-    exchange: one Arrow-batched kernel does tokenise → shingle-hash →
-    NUM_PERM affine-remix minima per document, all vectorised (memoised
-    crc32 token hashes, numpy uint64 shingle combine, one
-    minimum.reduceat pass per permutation over the whole batch).
-    Embarrassingly parallel: at 100 TB this stage scales with input
-    splits and nothing else. (JVM shingling was tried twice — string
-    shingles and token-hash combining — both bottleneck in Spark's
-    interpreted higher-order-function evaluator.)"""
+def signature_matrix(doc_ids, texts):
+    """(ids, sig): the MinHash signatures of the documents with at least
+    NGRAM tokens, as an int64 id vector and an int64 (n, NUM_PERM)
+    matrix. The one signature kernel: ``minhash_signatures`` runs it per
+    Arrow batch on the executors, the incremental index's driver twin on
+    a pulled micro-batch. Tokenise → shingle-hash → NUM_PERM affine-remix
+    minima, all vectorised (memoised crc32 token hashes, numpy uint64
+    shingle combine, one minimum.reduceat pass per permutation over the
+    whole batch)."""
     import numpy as np
-    import pandas as pd
 
     a, b = _perm_consts()
-    C1, C2, C3 = (
+    c1, c2, c3 = (
         np.uint64(0x9E3779B97F4A7C15),
         np.uint64(0xC2B2AE3D27D4EB4F),
         np.uint64(0x165667B19E3779F9),
     )
+    token_h: dict[str, int] = {}
+    ids, sh_arrays = [], []
+    for doc_id, text in zip(doc_ids, texts):
+        toks = text.split() if isinstance(text, str) else []
+        if len(toks) < NGRAM:
+            continue
+        hv = np.fromiter(
+            (token_h.get(t) or token_h.setdefault(t, zlib.crc32(t.encode()) + 1) for t in toks),
+            dtype=np.uint64,
+            count=len(toks),
+        )
+        sh = hv[:-2] * c1 + hv[1:-1] * c2 + hv[2:] * c3
+        sh ^= sh >> np.uint64(29)
+        sh *= c1
+        ids.append(doc_id)
+        sh_arrays.append(np.unique(sh))
+    sig = np.empty((len(ids), NUM_PERM), dtype=np.uint64)
+    if ids:
+        lens = np.fromiter((len(s) for s in sh_arrays), dtype=np.int64, count=len(ids))
+        h_all = np.concatenate(sh_arrays)
+        starts = np.zeros(len(ids), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        for i in range(NUM_PERM):
+            sig[:, i] = np.minimum.reduceat(h_all * a[i] + b[i], starts)
+    return np.asarray(ids, dtype=np.int64), sig.astype(np.int64)
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<bigint>[NUM_PERM]) — fully narrow, NO shuffle.
+
+    Shingles are a per-document set, so the signature never needs an
+    exchange: one Arrow-batched kernel (``signature_matrix``) per batch.
+    Embarrassingly parallel: at 100 TB this stage scales with input
+    splits and nothing else. (JVM shingling was tried twice — string
+    shingles and token-hash combining — both bottleneck in Spark's
+    interpreted higher-order-function evaluator.)"""
+    import pandas as pd
 
     def kernel(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            token_h: dict[str, int] = {}
-            ids, sh_arrays = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = text.split() if isinstance(text, str) else []
-                if len(toks) < NGRAM:
-                    continue
-                hv = np.fromiter(
-                    (
-                        token_h.get(t) or token_h.setdefault(t, zlib.crc32(t.encode()) + 1)
-                        for t in toks
-                    ),
-                    dtype=np.uint64,
-                    count=len(toks),
-                )
-                sh = hv[:-2] * C1 + hv[1:-1] * C2 + hv[2:] * C3
-                sh ^= sh >> np.uint64(29)
-                sh *= C1
-                ids.append(doc_id)
-                sh_arrays.append(np.unique(sh))
-            if not ids:
-                continue
-            lens = np.fromiter((len(s) for s in sh_arrays), dtype=np.int64, count=len(ids))
-            h_all = np.concatenate(sh_arrays)
-            starts = np.zeros(len(ids), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            sig = np.empty((len(ids), len(a)), dtype=np.uint64)
-            for i in range(len(a)):
-                sig[:, i] = np.minimum.reduceat(h_all * a[i] + b[i], starts)
-            sig = sig.astype(np.int64)
-            yield pd.DataFrame({"doc_id": ids, "sig": list(sig)})
+            ids, sig = signature_matrix(pdf["doc_id"], pdf["text"])
+            if len(ids):
+                yield pd.DataFrame({"doc_id": ids, "sig": list(sig)})
 
     from spider_spark.session import ensure_parallelism
 
@@ -134,6 +142,42 @@ def band_postings(sig: DataFrame, bands: int = BANDS) -> DataFrame:
         for b in range(bands)
     )
     return sig.selectExpr("doc_id", f"inline(array({structs}))")
+
+
+# Spark's XXH64 primes; band_keys replays ``xxhash64(sig[..])`` with them.
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_XXH_SEED = 42  # Spark's XxHash64 expression seed
+
+
+def band_keys(sig):
+    """The ``bh`` column of ``band_postings`` for an int64 (n, NUM_PERM)
+    signature matrix, as an int64 (n, BANDS) matrix: Spark's
+    ``xxhash64`` (XXH64 ``hashLong``, seed 42, chained over the band's
+    slots) in numpy uint64 arithmetic, bit-identical to the JVM."""
+    import numpy as np
+
+    u64 = np.uint64
+
+    def rotl(x, r):
+        return (x << u64(r)) | (x >> u64(64 - r))
+
+    r = NUM_PERM // BANDS
+    slots = np.ascontiguousarray(sig, dtype=np.int64).view(np.uint64).reshape(-1, BANDS, r)
+    h = np.full(slots.shape[:2], _XXH_SEED, dtype=np.uint64)
+    for i in range(r):
+        h = h + u64(_XXH_P5 + 8)
+        h ^= rotl(slots[:, :, i] * u64(_XXH_P2), 31) * u64(_XXH_P1)
+        h = rotl(h, 27) * u64(_XXH_P1) + u64(_XXH_P4)
+        h ^= h >> u64(33)
+        h *= u64(_XXH_P2)
+        h ^= h >> u64(29)
+        h *= u64(_XXH_P3)
+        h ^= h >> u64(32)
+    return h.view(np.int64)
 
 
 def lsh_candidate_pairs(
@@ -177,6 +221,22 @@ def estimate_jaccard(pairs: DataFrame, sig: DataFrame) -> DataFrame:
         .withColumn("est_jaccard", F.round(eq / F.lit(float(NUM_PERM)), 4))
         .select("doc_id_1", "doc_id_2", "est_jaccard")
     )
+
+
+# est_jaccard by equal-slot count: Spark's round(eq / 128.0, 4) is
+# HALF_UP, and eq / 128 is exact in binary and decimal alike.
+EST_JACCARD = tuple(
+    float((Decimal(k) / NUM_PERM).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+    for k in range(NUM_PERM + 1)
+)
+
+
+def signature_est_jaccard(sig1, sig2):
+    """est_jaccard of ``estimate_jaccard`` for row-aligned int64
+    signature matrices, as a float64 vector."""
+    import numpy as np
+
+    return np.asarray(EST_JACCARD)[(sig1 == sig2).sum(axis=1)]
 
 
 def minhash_lsh_pairs(

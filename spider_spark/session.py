@@ -58,6 +58,12 @@ def get_spark(
         # before its op comes round again and Janino recompiles it each
         # time (~160 compiles per olap round; 0 at 1024).
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # JIT code cache: a C1-only driver JVM (TieredStopAtLevel=1, as
+        # perfbench runs it) gets 48 MB, which a webtext_build run can
+        # fill ("CodeCache is full. Compiler has been disabled"), leaving
+        # the rest of the run interpreted. Spark puts the default options
+        # before any spark.driver.extraJavaOptions a caller sets.
+        .config("spark.driver.defaultJavaOptions", "-XX:ReservedCodeCacheSize=256m")
         .config("spark.driver.memory", os.environ.get("SPIDER_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Console progress bars write \r-frames that have corrupted every

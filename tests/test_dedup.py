@@ -286,3 +286,46 @@ def test_dedup_incremental_probe_semantics(spark, sf_dir):
     # novel docs carry NULL annotations
     novel = [r for r in rows.values() if not r.is_dup]
     assert novel and all(r.dup_of is None and r.jaccard is None for r in novel)
+
+
+def test_band_keys_equal_spark_band_postings(spark, cat):
+    """The numpy xxhash64 replay (minhash.band_keys) gives every band's
+    ``bh`` exactly as Spark's band_postings does, on real signatures and
+    on slots that cover the negative range and both int64 extremes."""
+    import numpy as np
+
+    from spider_spark.dedup.minhash import BANDS, band_keys
+
+    real = minhash_signatures(cat.documents.select("doc_id", "text")).collect()
+    rng = np.random.default_rng(7)
+    edge = rng.integers(-(2**63), 2**63 - 1, size=(6, NUM_PERM), dtype=np.int64, endpoint=True)
+    edge[0, :] = -1
+    edge[1, :] = -(2**63)
+    edge[2, :] = 2**63 - 1
+    edge[3, ::2] = 0
+    rows = [(r.doc_id, list(r.sig)) for r in real]
+    rows += [(10**9 + i, [int(v) for v in edge[i]]) for i in range(len(edge))]
+    sig = np.array([s for _, s in rows], dtype=np.int64)
+    assert (sig < 0).any()
+
+    got = band_keys(sig)
+    assert got.shape == (len(rows), BANDS)
+    want = band_postings(spark.createDataFrame(rows, "doc_id bigint, sig array<bigint>")).collect()
+    assert len(want) == len(rows) * BANDS
+    row_of = {d: i for i, (d, _) in enumerate(rows)}
+    assert all(got[row_of[r.doc_id], r.band] == r.bh for r in want)
+
+
+def test_est_jaccard_table_equals_spark_round(spark):
+    """EST_JACCARD[k] is Spark's round(k / 128.0, 4) (HALF_UP) for every
+    equal-slot count, including k ≡ 4 (mod 8), where k / 128 ends in 5
+    at the fifth decimal and half-even rounding would differ."""
+    from spider_spark.dedup.minhash import EST_JACCARD
+
+    eq = F.col("id").cast("int")
+    rows = spark.range(NUM_PERM + 1).select(
+        "id", F.round(eq / F.lit(float(NUM_PERM)), 4).alias("e")
+    ).collect()
+    assert list(EST_JACCARD) == [r.e for r in sorted(rows)]
+    ties = [k for k in range(NUM_PERM + 1) if round(k / NUM_PERM, 4) != EST_JACCARD[k]]
+    assert ties and all(k % 8 == 4 for k in ties)

@@ -30,3 +30,10 @@ def test_codegen_cache_holds_the_plan_working_set(spark, sf_dir):
     first = run_all()
     second = run_all()
     assert second <= 5, f"second pass recompiled {second} classes (first pass {first})"
+
+
+def test_driver_jvm_reserves_a_256m_code_cache(spark):
+    """get_spark sizes the JIT code cache in the driver JVM's launch
+    options (a filled cache disables the JIT for the rest of the run)."""
+    bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    assert "-XX:ReservedCodeCacheSize=256m" in list(bean.getInputArguments())
